@@ -12,8 +12,8 @@ the patterns that are NEVER acceptable at 100 TB:
   vector — so BNLJ occurrences are REPORTED per query, not failed;
   the deep pins in test_plans.py assert which side broadcasts.)
 - ``BatchEvalPython`` — a row-at-a-time Python UDF in the plan. The
-  engine's contract is Arrow-only Python (`MapInPandas` /
-  `FlatMapGroupsInPandas`), verified here structurally instead of by
+  engine's contract is Arrow-only Python (`MapInArrow` / `MapInPandas`
+  / `FlatMapGroupsInPandas`), verified here structurally instead of by
   source grep alone.
 - a Filter evaluating an md5/conv hash chain — the nullable-join-key
   class (r13): a nullable hash key makes joins infer isnotnull(key),
@@ -163,7 +163,8 @@ def lint_one(df) -> dict:
             "forbidden_total": sum(row[p] for p in FORBIDDEN),
             "bnlj": plan.count("BroadcastNestedLoopJoin"),
             "hash_exchanges": plan.count("Exchange hashpartitioning"),
-            "arrow_python": plan.count("MapInPandas")
+            "arrow_python": plan.count("MapInArrow")
+            + plan.count("MapInPandas")
             + plan.count("FlatMapGroupsInPandas"),
             "codegen_spans": plan.count("WholeStageCodegen"),
             # the nullable-join-key class (found r13 on decontaminate):

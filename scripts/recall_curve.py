@@ -368,7 +368,7 @@ def bq_curve(spark, sf_dir: str) -> list[dict]:
 def bq_ivf_curve(spark, sf_dir: str) -> list[dict]:
     """Mean recall@10 of the COMPOSED BQ×IVF serving tier vs nprobe —
     raw Hamming rank WITHIN probed lists, exactly what
-    ``serve_loop_rate_bq_ivf`` serves (no rescore stage), against the
+    ``serve_loop_rate(index="bq_ivf")`` serves (no rescore stage), against the
     same exact-kNN ground truth as the other curves. Recorded so a
     deployment prices the composition DIRECTLY instead of assuming the
     two component curves (ivf_nprobe × bq raw-Hamming) multiply
@@ -479,7 +479,7 @@ def bq_ivf_rescored_curve(spark, sf_dir: str) -> list[dict]:
     """Mean recall@10 of the PRODUCTION composed tier (r14):
     Hamming shortlist at k·overfetch WITHIN probed lists → exact float
     rescore of the shortlist — exactly what
-    ``serve_loop_rate_bq_ivf(rescore_overfetch=...)`` serves. The grid
+    ``serve_loop_rate(index="bq_ivf", rerank=...)`` serves. The grid
     prices BOTH knobs (nprobe × overfetch) so a deployment reads its
     operating point directly: the raw-Hamming ``bq_ivf`` rows are the
     overfetch→1 floor, and at nprobe=16/overfetch→∞ the row collapses

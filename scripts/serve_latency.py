@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Interactive-serving latency benchmark (VERDICT r6 #7).
+"""Interactive-serving latency benchmark.
 
 Measures the reference's interactive query path (upload → embed → kNN →
 join, ``app.py:124-179``) as the engine serves it: a Structured
@@ -16,14 +16,15 @@ property). Writes one JSON line and SERVE_LATENCY.json.
 
 Usage: python scripts/serve_latency.py [seconds] [rows_per_second]
 
-IVF-tier mode (VERDICT r8/r9/r10 #3 — "where does the knee move"):
+Tier modes ("where does the knee move"):
 
-  python scripts/serve_latency.py --ivf [corpus_dir] [seconds] [rate ...]
+  python scripts/serve_latency.py --ivf|--bq|--bqivf|--bqivf-rescored \
+      [corpus_dir] [seconds] [rate ...]
 
-runs the same rate-source loop backed by the partition-pruned
-inverted-list kernel (``serve_loop_rate_ivf`` over the materialized
+run the same rate-source loop on another index tier
+(``serve_loop_rate(index=...)``; the IVF tiers over the materialized
 ``partitionBy(centroid)`` layout of ``corpus_dir``'s embeddings table,
-nprobe priced by RECALL_CURVE.json), and MERGES an ``ivf_tier`` section
+nprobe priced by RECALL_CURVE.json) and MERGE a ``<tier>_tier`` section
 into SERVE_LATENCY.json next to the flat-scan numbers instead of
 overwriting them.
 """
@@ -55,118 +56,19 @@ def pct(xs: list[float], p: float) -> float:
     return xs[i]
 
 
-def run_one(spark, window_s: int, rate: int, corpus=None) -> dict:
-    # corpus is read ONCE by main and shared across runs — re-reading
-    # per run would pin a fresh duplicate cache entry of the same table
-    # every sweep point (serve_loop_rate caches its input)
-    if corpus is None:
-        corpus = spark.read.parquet(os.path.join(BASE, "embeddings.parquet"))
+def run_one(
+    spark, window_s: int, rate: int, corpus, index: str = "flat", **tier
+) -> dict:
+    """One serving window of ``serve_loop_rate`` on ``index``; ``tier``
+    carries the IVF/BQ arguments (centroids, nprobe, rerank). The
+    caller reads ``corpus`` ONCE and shares it across runs — re-reading
+    per run would pin a fresh duplicate cache entry of the same table
+    every sweep point (the flat/ivf tiers cache their input)."""
     latencies: list[float] = []
+    cache: list = []
     q = serve_loop_rate(
-        spark, corpus, k=5, rows_per_second=rate, latencies=latencies,
-        trigger_ms=1000,
-    )
-    try:
-        time.sleep(window_s)
-    finally:
-        q.stop()
-    warm = latencies[2:]
-    return {
-        "rows_per_second": rate,
-        "window_s": window_s,
-        "n_batches": len(latencies),
-        "warm_batches": len(warm),
-        "p50_s": round(pct(warm, 0.50), 3) if warm else None,
-        "p95_s": round(pct(warm, 0.95), 3) if warm else None,
-        "max_s": round(max(warm), 3) if warm else None,
-        "cold_first_batch_s": round(latencies[0], 3) if latencies else None,
-    }
-
-
-def run_one_ivf(
-    spark, window_s: int, rate: int, layout_path: str, centroids, nprobe: int
-) -> dict:
-    from the_build_project_image_retrieval_with_vector_databases_spark.streaming.queries import (
-        serve_loop_rate_ivf,
-    )
-
-    latencies: list[float] = []
-    q = serve_loop_rate_ivf(
-        spark, layout_path, centroids, k=5, nprobe=nprobe,
-        rows_per_second=rate, latencies=latencies, trigger_ms=1000,
-    )
-    try:
-        time.sleep(window_s)
-    finally:
-        q.stop()
-    warm = latencies[2:]
-    return {
-        "rows_per_second": rate,
-        "nprobe": nprobe,
-        "window_s": window_s,
-        "n_batches": len(latencies),
-        "warm_batches": len(warm),
-        "p50_s": round(pct(warm, 0.50), 3) if warm else None,
-        "p95_s": round(pct(warm, 0.95), 3) if warm else None,
-        "max_s": round(max(warm), 3) if warm else None,
-        "cold_first_batch_s": round(latencies[0], 3) if latencies else None,
-    }
-
-
-def main_ivf() -> None:
-    args = [a for a in sys.argv[2:]]
-    corpus_dir = args.pop(0) if args and not args[0].isdigit() else BASE
-    window_s = int(args.pop(0)) if args else 35
-    rates = [int(x) for x in args] or [250, 500, 1000]
-    nprobe = int(os.environ.get("SPARK_GRAFT_NPROBE", "4"))
-
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        _ivf_layout,
-    )
-
-    spark = get_spark(app_name="serve-latency-ivf", shuffle_partitions=8)
-    path, centroids = _ivf_layout(spark, corpus_dir)
-    # warm-up run, discarded (same C2-ramp rationale as the flat sweep)
-    run_one_ivf(spark, min(window_s, 15), rates[0], path, centroids, nprobe)
-    section = {
-        "corpus_dir": corpus_dir,
-        "layout": path,
-        "k_centroids": len(centroids),
-        "nprobe": nprobe,
-        "trigger_ms": 1000,
-        "warmup": f"{min(window_s, 15)}s@{rates[0]}qps discarded",
-        "runs": [
-            run_one_ivf(spark, window_s, r, path, centroids, nprobe)
-            for r in rates
-        ],
-    }
-    out_path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "SERVE_LATENCY.json")
-    art = {}
-    if os.path.exists(out_path):
-        with open(out_path) as f:
-            art = json.load(f)
-    art["ivf_tier"] = section
-    with open(out_path, "w") as f:
-        json.dump(art, f, indent=1, sort_keys=True)
-    print(json.dumps({"metric": "serve_latency_ivf", **section}))
-    from the_build_project_image_retrieval_with_vector_databases_spark.streaming.queries import (
-        release_layout_cache,
-    )
-
-    release_layout_cache()
-
-
-def run_one_bq(spark, window_s: int, rate: int, corpus) -> dict:
-    from the_build_project_image_retrieval_with_vector_databases_spark.streaming.queries import (
-        serve_loop_rate_bq,
-    )
-
-    latencies: list[float] = []
-    cache: list = []
-    q = serve_loop_rate_bq(
-        spark, corpus, k=5, rows_per_second=rate, latencies=latencies,
-        trigger_ms=1000, code_cache=cache,
+        spark, corpus, k=5, index=index, rows_per_second=rate,
+        latencies=latencies, trigger_ms=1000, code_cache=cache, **tier,
     )
     try:
         time.sleep(window_s)
@@ -175,7 +77,7 @@ def run_one_bq(spark, window_s: int, rate: int, corpus) -> dict:
         for df in cache:
             df.unpersist()
     warm = latencies[2:]
-    return {
+    row = {
         "rows_per_second": rate,
         "window_s": window_s,
         "n_batches": len(latencies),
@@ -185,211 +87,117 @@ def run_one_bq(spark, window_s: int, rate: int, corpus) -> dict:
         "max_s": round(max(warm), 3) if warm else None,
         "cold_first_batch_s": round(latencies[0], 3) if latencies else None,
     }
+    if "nprobe" in tier:
+        row["nprobe"] = tier["nprobe"]
+    return row
 
 
-def main_bq() -> None:
-    """BQ-tier rate loop (VERDICT r12 #4): the packed-code Hamming
-    scan under the SAME protocol as the ivf_tier sweep — 2M×64-D
-    corpus, 1 s trigger, 256-vector payload pool, warm-up run
-    discarded, rates 250/500/1000. Merges a ``bq_tier`` section into
-    SERVE_LATENCY.json next to the flat/ivf numbers, completing the
-    5-tier serving story."""
-    args = [a for a in sys.argv[2:]]
-    corpus_dir = args.pop(0) if args and not args[0].isdigit() else BASE
-    window_s = int(args.pop(0)) if args else 35
-    rates = [int(x) for x in args] or [250, 500, 1000]
-
-    spark = get_spark(app_name="serve-latency-bq", shuffle_partitions=8)
-    corpus = spark.read.parquet(
-        os.path.join(corpus_dir, "embeddings.parquet")
-    )
-    # warm-up run, discarded (same C2-ramp rationale as the flat sweep)
-    run_one_bq(spark, min(window_s, 15), rates[0], corpus)
-    section = {
-        "corpus_dir": corpus_dir,
-        "trigger_ms": 1000,
-        "warmup": f"{min(window_s, 15)}s@{rates[0]}qps discarded",
-        "runs": [run_one_bq(spark, window_s, r, corpus) for r in rates],
-    }
+def _merge_section(key: str, section: dict) -> None:
+    """Merge one section into SERVE_LATENCY.json, keeping the others."""
     out_path = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "SERVE_LATENCY.json")
     art = {}
     if os.path.exists(out_path):
         with open(out_path) as f:
             art = json.load(f)
-    art["bq_tier"] = section
+    art[key] = section
     with open(out_path, "w") as f:
         json.dump(art, f, indent=1, sort_keys=True)
-    print(json.dumps({"metric": "serve_latency_bq", **section}))
 
 
-def run_one_bq_ivf(
-    spark, window_s: int, rate: int, layout_path: str, centroids,
-    nprobe: int, rescore_overfetch: int | None = None,
-) -> dict:
-    from the_build_project_image_retrieval_with_vector_databases_spark.streaming.queries import (
-        serve_loop_rate_bq_ivf,
-    )
-
-    latencies: list[float] = []
-    cache: list = []
-    q = serve_loop_rate_bq_ivf(
-        spark, layout_path, centroids, k=5, nprobe=nprobe,
-        rows_per_second=rate, latencies=latencies, trigger_ms=1000,
-        code_cache=cache, rescore_overfetch=rescore_overfetch,
-    )
-    try:
-        time.sleep(window_s)
-    finally:
-        q.stop()
-        for df in cache:
-            df.unpersist()
-    warm = latencies[2:]
-    return {
-        "rows_per_second": rate,
-        "nprobe": nprobe,
-        "window_s": window_s,
-        "n_batches": len(latencies),
-        "warm_batches": len(warm),
-        "p50_s": round(pct(warm, 0.50), 3) if warm else None,
-        "p95_s": round(pct(warm, 0.95), 3) if warm else None,
-        "max_s": round(max(warm), 3) if warm else None,
-        "cold_first_batch_s": round(latencies[0], 3) if latencies else None,
-    }
+_TIER_NOTES = {
+    "bq_ivf": (
+        "Composed tier: SWAR Hamming scan restricted to each query's "
+        "nprobe probed inverted lists (partition-pruned scan bytes AND "
+        "16x-smaller code reads); ranks are raw Hamming within probed "
+        "lists — no float rescore stage (recall = the nprobe curve x "
+        "the sign-quantization curve, priced in RECALL_CURVE.json "
+        "bq_ivf). At 2M x 64-D this is the best-measured serving tier: "
+        "it holds the rate-loop knee below pure IVF (which pays "
+        "full-precision BLAS inside probed lists) and far below pure "
+        "BQ (which scans all 2M codes per epoch)."
+    ),
+    "bq_ivf_rescored": (
+        "Production composed tier: SWAR Hamming shortlist at "
+        "k*overfetch within each query's probed inverted lists, then "
+        "exact float re-rank of the shortlist only (Catalyst "
+        "zip_with/aggregate over a broadcast shortlist join -- no "
+        "second Python hop). Float work per epoch is Q*k*ov*D on the "
+        "shortlist instead of pure IVF's (nprobe/k_cents)*N*Q*D over "
+        "the probed lists; popcount work unchanged from bq_ivf_tier. "
+        "Recall at this operating point: RECALL_CURVE.json "
+        "bq_ivf_rescored (nprobe=4, ov=16 recovers ~96% of the "
+        "nprobe=4 IVF ceiling on the fixture corpus)."
+    ),
+}
 
 
-def main_bq_ivf() -> None:
-    """Composed BQ×IVF rate loop: the Hamming scan restricted to each
-    query's probed inverted lists — the production composition the
-    bq_tier null result points at. Same protocol as the other tier
-    sweeps; merges a ``bq_ivf_tier`` section into SERVE_LATENCY.json."""
+def main_tier(index: str, rerank: int = 0) -> None:
+    """Rate-loop sweep of one non-flat tier under the flat sweep's
+    protocol — 1 s trigger, 256-vector payload pool, a discarded
+    warm-up run (same C2-ramp rationale), rates 250/500/1000 by
+    default — merged into SERVE_LATENCY.json as ``<tier>_tier`` next to
+    the other tiers' numbers:
+
+      ivf              — Arrow/BLAS scan of the probed inverted lists
+      bq               — packed-code Hamming scan of the whole corpus
+      bq_ivf           — Hamming scan of the probed lists
+      bq_ivf_rescored  — bq_ivf shortlist at k·ov, exact float re-rank
+
+    The IVF tiers use ``corpus_dir``'s prebuilt ``ivf_layout`` +
+    ``centroids.json`` when present (``--build2m``), else the
+    content-addressed layout of its embeddings table; nprobe comes from
+    SPARK_GRAFT_NPROBE (default 4), ov from SPARK_GRAFT_RESCORE_OV."""
     args = [a for a in sys.argv[2:]]
     corpus_dir = args.pop(0) if args and not args[0].isdigit() else BASE
     window_s = int(args.pop(0)) if args else 35
     rates = [int(x) for x in args] or [250, 500, 1000]
-    nprobe = int(os.environ.get("SPARK_GRAFT_NPROBE", "4"))
+    label = index + ("_rescored" if rerank else "")
 
-    spark = get_spark(app_name="serve-latency-bqivf", shuffle_partitions=8)
-    lp = os.path.join(corpus_dir, "ivf_layout")
-    if os.path.exists(os.path.join(corpus_dir, "centroids.json")):
-        with open(os.path.join(corpus_dir, "centroids.json")) as f:
-            centroids = json.load(f)
+    spark = get_spark(app_name=f"serve-latency-{label}", shuffle_partitions=8)
+    section: dict = {"corpus_dir": corpus_dir, "trigger_ms": 1000}
+    tier: dict = {}
+    if index == "bq":
+        corpus = spark.read.parquet(os.path.join(corpus_dir, "embeddings.parquet"))
     else:
-        from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-            _ivf_layout,
-        )
-
-        lp, centroids = _ivf_layout(spark, corpus_dir)
-    run_one_bq_ivf(spark, min(window_s, 15), rates[0], lp, centroids, nprobe)
-    section = {
-        "corpus_dir": corpus_dir,
-        "layout": lp,
-        "k_centroids": len(centroids),
-        "nprobe": nprobe,
-        "trigger_ms": 1000,
-        "note": (
-            "Composed tier: SWAR Hamming scan restricted to each query's "
-            "nprobe probed inverted lists (partition-pruned scan bytes AND "
-            "16x-smaller code reads); ranks are raw Hamming within probed "
-            "lists — no float rescore stage (recall = the nprobe curve x "
-            "the sign-quantization curve, priced in RECALL_CURVE.json "
-            "bq_ivf). At 2M x 64-D this is the best-measured serving tier: "
-            "it holds the rate-loop knee below pure IVF (which pays "
-            "full-precision BLAS inside probed lists) and far below pure "
-            "BQ (which scans all 2M codes per epoch)."
-        ),
-        "warmup": f"{min(window_s, 15)}s@{rates[0]}qps discarded",
-        "runs": [
-            run_one_bq_ivf(spark, window_s, r, lp, centroids, nprobe)
-            for r in rates
-        ],
-    }
-    out_path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "SERVE_LATENCY.json")
-    art = {}
-    if os.path.exists(out_path):
-        with open(out_path) as f:
-            art = json.load(f)
-    art["bq_ivf_tier"] = section
-    with open(out_path, "w") as f:
-        json.dump(art, f, indent=1, sort_keys=True)
-    print(json.dumps({"metric": "serve_latency_bq_ivf", **section}))
-
-
-def main_bq_ivf_rescored() -> None:
-    """PRODUCTION composed tier (VERDICT r13 #3): Hamming shortlist at
-    k·overfetch within probed lists → exact float rescore — the shape
-    the raw bq_ivf_tier's recall note points at. Same protocol as the
-    other tier sweeps; merges a ``bq_ivf_rescored_tier`` section. The
-    comparison the section answers: p50 vs pure IVF at the MATCHED
-    recall point (nprobe=4, ov=16 rescoring recovers ~96% of the
-    nprobe=4 IVF ceiling — RECALL_CURVE.json ``bq_ivf_rescored``)."""
-    args = [a for a in sys.argv[2:]]
-    corpus_dir = args.pop(0) if args and not args[0].isdigit() else BASE
-    window_s = int(args.pop(0)) if args else 35
-    rates = [int(x) for x in args] or [250, 500, 1000]
-    nprobe = int(os.environ.get("SPARK_GRAFT_NPROBE", "4"))
-    ov = int(os.environ.get("SPARK_GRAFT_RESCORE_OV", "16"))
-
-    spark = get_spark(app_name="serve-latency-bqivf-resc", shuffle_partitions=8)
-    lp = os.path.join(corpus_dir, "ivf_layout")
-    if os.path.exists(os.path.join(corpus_dir, "centroids.json")):
-        with open(os.path.join(corpus_dir, "centroids.json")) as f:
-            centroids = json.load(f)
-    else:
-        from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-            _ivf_layout,
-        )
-
-        lp, centroids = _ivf_layout(spark, corpus_dir)
-    run_one_bq_ivf(
-        spark, min(window_s, 15), rates[0], lp, centroids, nprobe,
-        rescore_overfetch=ov,
-    )
-    section = {
-        "corpus_dir": corpus_dir,
-        "layout": lp,
-        "k_centroids": len(centroids),
-        "nprobe": nprobe,
-        "rescore_overfetch": ov,
-        "trigger_ms": 1000,
-        "note": (
-            "Production composed tier: SWAR Hamming shortlist at "
-            "k*overfetch within each query's probed inverted lists, then "
-            "exact float re-rank of the shortlist only (Catalyst "
-            "zip_with/aggregate over a broadcast shortlist join -- no "
-            "second Python hop). Float work per epoch is Q*k*ov*D on the "
-            "shortlist instead of pure IVF's (nprobe/k_cents)*N*Q*D over "
-            "the probed lists; popcount work unchanged from bq_ivf_tier. "
-            "Recall at this operating point: RECALL_CURVE.json "
-            "bq_ivf_rescored (nprobe=4, ov=16 recovers ~96% of the "
-            "nprobe=4 IVF ceiling on the fixture corpus)."
-        ),
-        "warmup": f"{min(window_s, 15)}s@{rates[0]}qps discarded",
-        "runs": [
-            run_one_bq_ivf(
-                spark, window_s, r, lp, centroids, nprobe,
-                rescore_overfetch=ov,
+        path = os.path.join(corpus_dir, "ivf_layout")
+        cents_path = os.path.join(corpus_dir, "centroids.json")
+        if os.path.exists(cents_path):
+            with open(cents_path) as f:
+                centroids = json.load(f)
+        else:
+            from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
+                _ivf_layout,
             )
-            for r in rates
-        ],
-    }
-    out_path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "SERVE_LATENCY.json")
-    art = {}
-    if os.path.exists(out_path):
-        with open(out_path) as f:
-            art = json.load(f)
-    art["bq_ivf_rescored_tier"] = section
-    with open(out_path, "w") as f:
-        json.dump(art, f, indent=1, sort_keys=True)
-    print(json.dumps({"metric": "serve_latency_bq_ivf_rescored", **section}))
+
+            path, centroids = _ivf_layout(spark, corpus_dir)
+        corpus = spark.read.parquet(path)
+        tier = {
+            "centroids": centroids,
+            "nprobe": int(os.environ.get("SPARK_GRAFT_NPROBE", "4")),
+        }
+        section.update(
+            layout=path, k_centroids=len(centroids), nprobe=tier["nprobe"]
+        )
+    if rerank:
+        tier["rerank"] = rerank
+        section["rescore_overfetch"] = rerank
+    if label in _TIER_NOTES:
+        section["note"] = _TIER_NOTES[label]
+    run_one(spark, min(window_s, 15), rates[0], corpus, index, **tier)
+    section["warmup"] = f"{min(window_s, 15)}s@{rates[0]}qps discarded"
+    section["runs"] = [
+        run_one(spark, window_s, r, corpus, index, **tier) for r in rates
+    ]
+    corpus.unpersist()
+    _merge_section(f"{label}_tier", section)
+    print(json.dumps({"metric": f"serve_latency_{label}", **section}))
 
 
 def main_build2m() -> None:
     """Rebuild the 2M×64-D serve corpus (/tmp/spark_graft_serve2m) the
-    tier sweeps measure against — /tmp does not survive rounds, so the
-    builder is committed. Construction (as in r11): the 100× derived
+    tier sweeps measure against — /tmp is not persistent, so its
+    construction lives here: the 100× derived
     corpus (scripts/scale_proof.py build, 200k vectors, distance-
     preserving rotation replicas) replicated 10× with id offsets;
     IVF layout (16 lowest-id centroids, partitionBy(centroid)) +
@@ -439,13 +247,13 @@ def main_build2m() -> None:
 
 
 def main_attrib() -> None:
-    """Attribute the ~0.5-0.7 s single-query fixed cost (VERDICT r12
-    #5): time each layer of one flat Arrow-kernel call on the cached
-    200k corpus and difference them. Layers, each min-of-N warm:
+    """Attribute the ~0.5-0.7 s single-query fixed cost: time each
+    layer of one flat Arrow-kernel call on the cached 200k corpus and
+    difference them. Layers, each min-of-N warm:
       scheduler_floor  — a 32-task no-op job on a cached 32-row df
                          (task scheduling + py4j round-trip, no data)
-      arrow_ship       — mapInPandas over the SAME projected corpus
-                         returning empty frames (Arrow serialization
+      arrow_ship       — mapInArrow over the SAME projected corpus
+                         returning one-row batches (Arrow serialization
                          of 200k x (id + 64-D vector) to the Python
                          workers + worker turnaround, no math)
       reexec_same_df   — .collect() of an ALREADY-PLANNED kNN call
@@ -496,18 +304,18 @@ def main_attrib() -> None:
     proj = emb.select("vec_id", "embedding")
 
     def passthrough(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            yield pd.DataFrame({"n": [len(pdf)]})
+        for batch in batches:
+            yield pa.RecordBatch.from_pydict({"n": [batch.num_rows]})
 
     ship = timed(
-        lambda i: proj.mapInPandas(passthrough, "n long").collect()
+        lambda i: proj.mapInArrow(passthrough, "n long").collect()
     )
     # pre-built passthrough: NO shuffle in this plan, so every
     # re-collect re-runs the whole Arrow ship + Python worker pass —
     # ship WITHOUT the per-call plan compile
-    pass_fixed = proj.mapInPandas(passthrough, "n long")
+    pass_fixed = proj.mapInArrow(passthrough, "n long")
     pass_fixed.collect()
     ship_exec = timed(lambda i: pass_fixed.collect())
 
@@ -515,7 +323,7 @@ def main_attrib() -> None:
     fixed.collect()  # analyze + codegen once
     # NOTE: the kNN plan ends in a rank-window EXCHANGE; re-collecting
     # the SAME DataFrame skips the completed shuffle-map stage (the
-    # scan+score mapInPandas — shuffle files ARE its materialization),
+    # scan+score mapInArrow — shuffle files ARE its materialization),
     # so this times the result stage alone, not a repeat of the scan.
     reexec = timed(lambda i: fixed.collect())
 
@@ -573,15 +381,7 @@ def main_attrib() -> None:
             "(search_batch: one plan for Q queries), not plan reuse."
         ),
     }
-    out_path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "SERVE_LATENCY.json")
-    art = {}
-    if os.path.exists(out_path):
-        with open(out_path) as f:
-            art = json.load(f)
-    art["single_query_cost_breakdown"] = section
-    with open(out_path, "w") as f:
-        json.dump(art, f, indent=1, sort_keys=True)
+    _merge_section("single_query_cost_breakdown", section)
     print(json.dumps({"metric": "single_query_cost_breakdown", **section}))
 
 
@@ -593,7 +393,7 @@ def main() -> None:
     spark = get_spark(app_name="serve-latency", shuffle_partitions=8)
     # Discarded warm-up window: the JVM's C2 ramp spans MANY microbatch
     # jobs, so the first measured run would otherwise report ~+0.4 s
-    # p50 purely from compilation (measured r8: first 35 s run p50
+    # p50 purely from compilation (measured: first 35 s run p50
     # 1.99 s vs 1.65 s for an identical back-to-back run). Steady-state
     # is the serving SLO. NOTE: with the warm-up discarded,
     # cold_first_batch_s measures per-STREAM startup (first microbatch
@@ -601,13 +401,13 @@ def main() -> None:
     # figure is the warm-up run's first batch, which this script
     # deliberately does not report.
     corpus = spark.read.parquet(os.path.join(BASE, "embeddings.parquet"))
-    run_one(spark, min(window_s, 15), rates[0], corpus=corpus)
+    run_one(spark, min(window_s, 15), rates[0], corpus)
     out = {
         "metric": "serve_latency",
         "sf_dir": BASE,
         "trigger_ms": 1000,
         "warmup": f"{min(window_s, 15)}s@{rates[0]}qps discarded",
-        "runs": [run_one(spark, window_s, r, corpus=corpus) for r in rates],
+        "runs": [run_one(spark, window_s, r, corpus) for r in rates],
     }
     line = json.dumps(out)
     print(line)
@@ -617,14 +417,14 @@ def main() -> None:
 
 
 def main_single() -> None:
-    """Single-query latency (VERDICT r11 #6): p50/p95 of ONE query
+    """Single-query latency: p50/p95 of ONE query
     through the Arrow kernels directly — no rate loop, no trigger
     interval, no arrival queueing. This is the engine's honest answer
     to the reference's interactive click (app.py:171 ``index.search``
     of one uploaded image): call → collect, wall-clock per call.
 
     Flat (knn_join_arrow) vs IVF (knn_join_arrow_ivf, nprobe=4/16) on
-    the r11 serve corpora: 200k × 64-D (/tmp/spark_graft_scale100x)
+    the serve corpora: 200k × 64-D (/tmp/spark_graft_scale100x)
     and 2M × 64-D (/tmp/spark_graft_serve2m, prebuilt
     partitionBy(centroid) layout). Both tiers run against CACHED
     inputs (the steady-state serving memory model); 5 discarded
@@ -716,7 +516,7 @@ def main_single() -> None:
         ivf = sweep(lambda i: knn_join_arrow_ivf(
             layout, [pool[i % 32][0]], [pool[i % 32][1]],
             [nearest_centroids(cents, pool[i % 32][1], nprobe)], k=k))
-        # BQ tier (staged r12): packed 16-byte codes through the Arrow
+        # BQ tier: packed 16-byte codes through the Arrow
         # Hamming kernel — the rescore-tier latency story at 2M
         from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
             knn_join_arrow_hamming,
@@ -737,7 +537,7 @@ def main_single() -> None:
         qh = [bq_encode_query(v, thr, len(train)) for _, v in pool]
         bq = sweep(lambda i: knn_join_arrow_hamming(
             codes, [pool[i % 32][0]], [qh[i % 32]], k=k))
-        # composed tiers (r14): Hamming within probed lists, raw and
+        # composed tiers: Hamming within probed lists, raw and
         # with the float-rescore stage — the single-query twins of the
         # bq_ivf_tier / bq_ivf_rescored_tier rate loops
         from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
@@ -774,29 +574,23 @@ def main_single() -> None:
         emb.unpersist(); layout.unpersist(); codes.unpersist()
         ccodes.unpersist(); floats.unpersist()
 
-    out_path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "SERVE_LATENCY.json")
-    art = {}
-    if os.path.exists(out_path):
-        with open(out_path) as f:
-            art = json.load(f)
-    art["single_query_latency"] = section
-    with open(out_path, "w") as f:
-        json.dump(art, f, indent=1, sort_keys=True)
+    _merge_section("single_query_latency", section)
     print(json.dumps({"metric": "single_query_latency", **section}))
 
 
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--ivf":
-        main_ivf()
+        main_tier("ivf")
     elif len(sys.argv) > 1 and sys.argv[1] == "--single":
         main_single()
     elif len(sys.argv) > 1 and sys.argv[1] == "--bq":
-        main_bq()
+        main_tier("bq")
     elif len(sys.argv) > 1 and sys.argv[1] == "--bqivf":
-        main_bq_ivf()
+        main_tier("bq_ivf")
     elif len(sys.argv) > 1 and sys.argv[1] == "--bqivf-rescored":
-        main_bq_ivf_rescored()
+        main_tier(
+            "bq_ivf", rerank=int(os.environ.get("SPARK_GRAFT_RESCORE_OV", "16"))
+        )
     elif len(sys.argv) > 1 and sys.argv[1] == "--build2m":
         main_build2m()
     elif len(sys.argv) > 1 and sys.argv[1] == "--attrib":

@@ -24,3 +24,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_ORACLE
+
+
+# Adversarial corpora for the kernel-parity tests: a tie flood (every
+# row the same vector), exact duplicate pairs, and zero vectors (every
+# third row). 24 rows × 32-D (one packed BQ half); centroid = id % 3,
+# label = id % 2, so probe sets and label masks cut through the ties.
+DEGENERATE_KINDS = ("identical", "dup_pairs", "zeros")
+
+
+def degenerate_frame(spark, kind: str, n: int = 24, dim: int = 32):
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    if kind == "identical":
+        mat = np.tile(rng.standard_normal(dim), (n, 1))
+    elif kind == "dup_pairs":
+        mat = np.repeat(rng.standard_normal((n // 2, dim)), 2, axis=0)
+    else:
+        mat = rng.standard_normal((n, dim))
+        mat[::3] = 0.0
+    df = spark.createDataFrame(
+        [(i, i % 3, i % 2, [float(x) for x in mat[i]]) for i in range(n)],
+        "vec_id long, centroid int, label int, embedding array<double>",
+    )
+    return mat, df

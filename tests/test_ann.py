@@ -25,7 +25,7 @@ from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn
     knn_single,
     radius_join,
 )
-from .conftest import SF_SMOKE
+from .conftest import DEGENERATE_KINDS, SF_SMOKE, degenerate_frame
 
 
 @pytest.fixture(scope="module")
@@ -1139,3 +1139,166 @@ def test_search_facade_bq_rerank_tier(emb, emb_np):
     assert "TakeOrderedAndProject" in plan
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_ivf_kernels_reject_all_empty_probe_sets(spark):
+    """All-empty probe sets must raise on every IVF kernel: the union
+    scan filter ``isin([])`` would otherwise drop every row and return
+    an empty answer as if nothing matched."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
+        knn_join_arrow_hamming_ivf,
+        knn_join_arrow_ivf,
+    )
+
+    layout = spark.createDataFrame(
+        [(0, 0, [0.0, 1.0], 1)],
+        "vec_id long, centroid int, embedding array<double>, bq_h0 long",
+    )
+    with pytest.raises(ValueError, match="probe set"):
+        knn_join_arrow_ivf(layout, [0], [[0.0, 1.0]], [[]], k=3)
+    with pytest.raises(ValueError, match="probe set"):
+        knn_join_arrow_hamming_ivf(
+            layout, [0], [[1]], [[]], k=3, code_cols=("bq_h0",)
+        )
+
+
+@pytest.mark.parametrize("bad", ["ragged", "null"])
+@pytest.mark.parametrize("path", ["flat", "ivf", "exact", "argmin"])
+def test_vector_decode_rejects_ragged_and_null_vectors(spark, path, bad):
+    """Every Arrow decode path refuses a ragged or null vector with an
+    error naming the column — a flatten + reshape would otherwise fold
+    rows of lengths 2, 1, 3 silently into a 3×2 matrix."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
+        assign_centroids_arrow,
+    )
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
+        knn_join_arrow,
+        knn_join_arrow_ivf,
+        knn_join_exact,
+    )
+
+    mid = [1.0] if bad == "ragged" else None
+    df = spark.createDataFrame(
+        [(0, 0, [0.0, 1.0]), (1, 0, mid), (2, 0, [2.0, 3.0])],
+        "vec_id long, centroid int, embedding array<double>",
+    ).coalesce(1)
+    q = [[0.0, 1.0]]
+    run = {
+        "flat": lambda: knn_join_arrow(df, [0], q, k=2),
+        "ivf": lambda: knn_join_arrow_ivf(df, [0], q, [[0]], k=2),
+        "exact": lambda: knn_join_exact(df, [0], q, k=2),
+        "argmin": lambda: assign_centroids_arrow(df, q),
+    }[path]
+    with pytest.raises(Exception, match="ValueError: column 'embedding'"):
+        run().collect()
+
+
+def test_vector_decode_of_sliced_batch():
+    """A sliced Arrow batch (list offsets not starting at 0) decodes to
+    its own rows, widened to float64; ragged and null lists raise."""
+    import pyarrow as pa
+
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
+        _vectors,
+    )
+
+    arr = pa.array(
+        [[1.0, 2.0], [3.0, 4.0], [5.0, 6.0], [7.0, 8.0]], pa.list_(pa.float32())
+    )
+    batch = pa.RecordBatch.from_arrays([arr], names=["embedding"]).slice(1, 2)
+    assert batch.column(0).offsets[0].as_py() == 2
+    x = _vectors(batch, "embedding")
+    assert x.dtype == np.float64
+    assert x.tolist() == [[3.0, 4.0], [5.0, 6.0]]
+    for bad in ([[1.0, 2.0], [3.0], [4.0, 5.0, 6.0]], [[1.0, 2.0], None]):
+        b = pa.RecordBatch.from_arrays([pa.array(bad)], names=["embedding"])
+        with pytest.raises(ValueError, match="column 'embedding'"):
+            _vectors(b, "embedding")
+
+
+@pytest.mark.parametrize("kind", DEGENERATE_KINDS)
+def test_arrow_kernels_match_twins_on_degenerate_corpora(spark, kind):
+    """Tie floods, exact duplicate pairs and zero vectors: the flat
+    BLAS kernel (l2/dot/cosine) ranks exactly like the expression join;
+    the IVF kernel like a numpy reference over each query's probed
+    lists, ties by (round(dist, 6), id); the Hamming kernels, flat and
+    IVF, bit-identically with the ``bq_hamming`` expression form."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
+        knn_join_arrow,
+        knn_join_arrow_hamming,
+        knn_join_arrow_hamming_ivf,
+        knn_join_arrow_ivf,
+    )
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.pq import (
+        bq_encode_cols,
+        bq_encode_query,
+        bq_hamming,
+        bq_train_thresholds,
+    )
+    mat, df = degenerate_frame(spark, kind)
+    n, k = len(mat), 5
+    qids = [0, 1, 2, 5]
+    qmat = [[float(x) for x in mat[i]] for i in qids]
+    probes = [[0, 1], [2], [0, 2], [1]]
+
+    def frame(out, col="dist"):
+        return {(r.query_id, r.rank): (r.vec_id, r[col]) for r in out.collect()}
+
+    qdf = spark.createDataFrame(
+        list(zip(qids, qmat)), "query_id long, embedding array<double>"
+    )
+    for metric in ("l2", "dot", "cosine"):
+        got = frame(
+            knn_join_arrow(df, qids, qmat, k=k, metric=metric, exclude_self=True)
+        )
+        want = frame(knn_join(df, qdf, k=k, metric=metric, exclude_self=True))
+        assert got.keys() == want.keys(), metric
+        for key, (vid, dist) in want.items():
+            assert got[key][0] == vid, (metric, key)
+            assert abs(got[key][1] - dist) < 1e-6, (metric, key)
+
+    got = frame(knn_join_arrow_ivf(df, qids, qmat, probes, k=k))
+    for qid, qv, ps in zip(qids, qmat, probes):
+        q = np.asarray(qv)
+        cand = sorted(
+            (round(float(np.sqrt(max(
+                mat[i] @ mat[i] - 2.0 * (mat[i] @ q) + q @ q, 0.0))), 6), i)
+            for i in range(n)
+            if i % 3 in ps
+        )[:k]
+        assert [got[(qid, r)][0] for r in range(1, len(cand) + 1)] == [
+            i for _, i in cand
+        ], qid
+        assert sum(1 for g, _r in got if g == qid) == len(cand)
+
+    train = [list(mat[i]) for i in range(16)]
+    thr = bq_train_thresholds(train)
+    (h0,) = bq_encode_cols(thr, len(train))
+    codes = df.select("vec_id", "centroid", h0.alias("bq_h0"))
+    qcodes = [bq_encode_query(v, thr, len(train)) for v in qmat]
+    flat = frame(
+        knn_join_arrow_hamming(
+            codes.drop("centroid"), qids, qcodes, k=k, code_cols=("bq_h0",)
+        ),
+        "hamming",
+    )
+    ivf = frame(
+        knn_join_arrow_hamming_ivf(
+            codes, qids, qcodes, probes, k=k, code_cols=("bq_h0",)
+        ),
+        "hamming",
+    )
+    for qid, qc, ps in zip(qids, qcodes, probes):
+        probed = codes.filter(F.col("centroid").isin(ps))
+        for sub, got in ((codes, flat), (probed, ivf)):
+            expect = [
+                (e.vec_id, e.hamming)
+                for e in sub.select(
+                    "vec_id", bq_hamming(qc, ["bq_h0"]).alias("hamming")
+                )
+                .orderBy("hamming", "vec_id")
+                .limit(k)
+                .collect()
+            ]
+            assert [got[(qid, r)] for r in range(1, len(expect) + 1)] == expect
+            assert sum(1 for g, _r in got if g == qid) == len(expect)

@@ -35,8 +35,13 @@ def skew_confs(spark):
 
 def test_aqe_splits_skewed_join(spark, skew_confs):
     # 60% of fact rows share one key; values are wide strings so the hot
-    # partition trips the (lowered) skew threshold
-    fact = spark.range(0, 40_000).select(
+    # partition trips the (lowered) skew threshold. The payload compresses
+    # ~100x, so the hot partition's shuffle bytes sit near the 10KB
+    # threshold and depend on the per-map-block framing: pin the map-side
+    # split count so AQE sees the same sizes at any core count (with
+    # defaultParallelism splits, 8 cores gave an 11.3KB max against an
+    # 8.0KB median — too small to split into two 10KB advisory parts).
+    fact = spark.range(0, 40_000, 1, 32).select(
         F.when(F.col("id") % 5 < 3, F.lit(7))
         .otherwise(F.col("id") % 97 + 100)  # cold keys 100..196, never 7
         .alias("k"),

@@ -11,6 +11,7 @@ claim as FULL-FRAME equality including distance bits, not rank parity.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
@@ -18,7 +19,7 @@ from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn
     knn_join_exact,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import DEGENERATE_KINDS, SF_SMOKE, degenerate_frame
 
 K = 7
 
@@ -146,9 +147,55 @@ def test_knn_join_exact_plan_no_corpus_shuffle(spark):
 
 
 def test_knn_join_exact_validation():
-    import pytest
-
     with pytest.raises(ValueError, match="query_mat"):
         knn_join_exact(None, [], np.zeros((0, 4)), k=3)
     with pytest.raises(ValueError, match="label_col"):
         knn_join_exact(None, [1], [[0.0]], query_labels=[2])
+
+
+@pytest.mark.parametrize("kind", DEGENERATE_KINDS)
+def test_knn_join_exact_degenerate_corpora_bit_parity(spark, kind):
+    """Tie floods, exact duplicate pairs and zero vectors: with the
+    label mask, self exclusion and a recon hook all on, the kernel's
+    frame (ids, ranks, dist bits) equals the expression twin's — every
+    tie resolves by id exactly as the (dist, id) window orders it."""
+    from pyspark.sql import Window
+
+    from the_build_project_image_retrieval_with_vector_databases_spark.functions.vector import (
+        l2_dist,
+    )
+
+    mat, df = degenerate_frame(spark, kind)
+    ids = [0, 1, 2, 5]
+    qm = [[float(x) for x in mat[i]] for i in ids]
+    labels = [i % 2 for i in ids]
+    got = _frame(
+        knn_join_exact(
+            df, ids, qm, k=K, exclude_self=True, query_labels=labels,
+            label_col="label", recon=lambda x: x * 0.5,
+        )
+    )
+    halved = df.select(
+        "vec_id",
+        "label",
+        F.transform("embedding", lambda v: v * F.lit(0.5)).alias("embedding"),
+    )
+    q = spark.createDataFrame(
+        list(zip(ids, qm, labels)),
+        "query_id long, __qvec array<double>, qlabel int",
+    )
+    joined = (
+        halved.crossJoin(F.broadcast(q))
+        .filter(
+            (F.col("label") != F.col("qlabel"))
+            & (F.col("vec_id") != F.col("query_id"))
+        )
+        .withColumn("dist", l2_dist(F.col("embedding"), F.col("__qvec")))
+    )
+    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
+    want = _frame(
+        joined.withColumn("rank", F.row_number().over(w)).filter(
+            F.col("rank") <= K
+        )
+    )
+    assert got == want

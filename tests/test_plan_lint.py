@@ -8,7 +8,8 @@ mechanism-diverse subset so a regression fails the suite immediately:
   nested-loop of a one-row literal side is legitimate and asserted
   separately by the deep pins).
 - ``BatchEvalPython``: a row-at-a-time Python UDF — the engine's
-  Python surface is Arrow-only (MapInPandas / FlatMapGroupsInPandas).
+  Python surface is Arrow-only (MapInArrow / MapInPandas /
+  FlatMapGroupsInPandas).
 """
 
 from __future__ import annotations

@@ -162,10 +162,10 @@ def test_ivfpq_topk_pruned_and_codes_only(spark):
 def test_registry_wide_plan_hygiene(spark):
     """Global contracts over EVERY registered query's physical plan:
     no row-at-a-time Python UDFs (`BatchEvalPython`) — Arrow
-    `MapInPandas`/`FlatMapGroupsInPandas` are the only Python operators
-    allowed — and no un-broadcast `CartesianProduct` (the broadcast
-    nested-loop form is fine; a shuffled cartesian is never the plan we
-    want)."""
+    `MapInArrow`/`MapInPandas`/`FlatMapGroupsInPandas` are the only
+    Python operators allowed — and no un-broadcast `CartesianProduct`
+    (the broadcast nested-loop form is fine; a shuffled cartesian is
+    never the plan we want)."""
     for name, fn in sorted(entrymod.queries().items()):
         plan = _physical(fn(spark, SF_SMOKE))
         assert "BatchEvalPython" not in plan, f"{name}: row-wise Python UDF"
@@ -536,7 +536,7 @@ def test_ann_recall_eval_one_scan_one_exchange(spark):
 
     df = q_ann_recall_eval(spark, SF_SMOKE)
     plan = _physical(df)
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert plan.count("Exchange hashpartitioning") == 1
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from the_build_project_image_retrieval_with_vector_databases_spark.functions.vector import (
@@ -21,6 +22,8 @@ from the_build_project_image_retrieval_with_vector_databases_spark.functions.tex
     tokens,
 )
 from pyspark.sql import functions as F
+
+from .conftest import DEGENERATE_KINDS, degenerate_frame
 
 finite_f32 = st.floats(
     min_value=-100.0, max_value=100.0, allow_nan=False, width=32
@@ -425,3 +428,49 @@ def test_knn_recall_eval_exact_property(spark, seed, n):
             if i != qi and int(cents[i]) in probes[qi])][:k]
         n_hits = len(set(exact) & set(approx))
         assert got[qi] == (n_hits, n_hits / float(k)), (seed, qi)
+
+
+@pytest.mark.parametrize("kind", DEGENERATE_KINDS)
+def test_recall_evals_degenerate_corpora(spark, kind):
+    """Tie floods, exact duplicate pairs and zero vectors: both one-scan
+    recall evals equal a brute-force reference — left-fold distances,
+    self excluded, every top-k cut by (dist, id) — for the IVF tier and
+    for two reconstruction tiers."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
+        knn_multi_recon_recall,
+        knn_recall_eval_exact,
+    )
+
+    mat, df = degenerate_frame(spark, kind)
+    n, k = len(mat), 4
+    qids = [0, 1, 2, 5]
+    qm = [[float(x) for x in mat[i]] for i in qids]
+    probes = [[0, 1], [2], [0, 2], [1]]
+    recons = [("half", lambda x: x * 0.5), ("sign", np.sign)]
+
+    def topk(vecs, qid, rows):
+        def dist(i):
+            acc = 0.0
+            for j in range(vecs.shape[1]):
+                dj = vecs[i][j] - mat[qid][j]
+                acc = acc + dj * dj
+            return math.sqrt(acc)
+
+        return {i for _, i in sorted((dist(i), i) for i in rows if i != qid)[:k]}
+
+    ivf = {
+        r.query_id: (r.n_hits, r.recall)
+        for r in knn_recall_eval_exact(df, qids, qm, probes, k=k).collect()
+    }
+    multi = {
+        (r.query_id, r.tier): (r.n_hits, r.recall)
+        for r in knn_multi_recon_recall(df, qids, qm, recons, k=k).collect()
+    }
+    assert len(ivf) == len(qids) and len(multi) == len(qids) * len(recons)
+    for qid, ps in zip(qids, probes):
+        exact = topk(mat, qid, range(n))
+        h = len(exact & topk(mat, qid, [i for i in range(n) if i % 3 in ps]))
+        assert ivf[qid] == (h, h / k), (kind, qid)
+        for name, fn in recons:
+            h = len(exact & topk(fn(mat), qid, range(n)))
+            assert multi[(qid, name)] == (h, h / k), (kind, qid, name)

@@ -1965,7 +1965,7 @@ def test_semantic_decontaminate_oracle_parity_staged(spark, sf_dir):
 
 def test_semantic_decontaminate_plan_no_corpus_shuffle(spark):
     """Kernel-composition plan contract: the corpus scan feeds
-    mapInPandas directly (normalize + distance inside the Arrow
+    mapInArrow directly (normalize + distance inside the Arrow
     kernel); the only exchanges are the two bounded candidate windows
     (per-eval rank, per-corpus-row best) over <= partitions*Q*k rows.
     No cartesian, no BNLJ."""
@@ -1978,7 +1978,7 @@ def test_semantic_decontaminate_plan_no_corpus_shuffle(spark):
     assert plan.count("Exchange hashpartitioning") == 2
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_semantic_screen_empty_eval_slice_raises_clearly(spark):

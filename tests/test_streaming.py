@@ -180,66 +180,50 @@ def test_serve_loop_matches_batch_knn(spark, tmp_path):
     assert len(results) == 15  # 5 queries × k=3
 
 
-def test_serve_loop_rate_latency_and_self_hit(spark):
-    """Continuous serving on the rate source: batches score under load,
-    per-batch end-to-end latency is recorded and bounded, and every
-    query's rank-1 neighbor is itself (exclude_self=False ⇒ distance 0)."""
+@pytest.mark.parametrize(
+    "index, rerank",
+    [("flat", 0), ("ivf", 0), ("bq", 0), ("bq_ivf", 0), ("bq_ivf", 4)],
+    ids=["flat", "ivf", "bq", "bq_ivf", "bq_ivf_rerank"],
+)
+def test_serve_loop_rate_latency_and_self_hit(spark, index, rerank):
+    """Continuous serving on the rate source, every index tier: batches
+    score under load, per-batch end-to-end latency is recorded and
+    bounded, and every query finds ITSELF — at rank 1 for the float
+    tiers (distance 0; the query's own inverted list is always its
+    first probe), at hamming 0 for the raw Hamming tiers (its own code
+    XOR itself). Kernel parity is pinned in test_ann.py."""
     import time
 
+    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
+        _ivf_layout,
+    )
     from the_build_project_image_retrieval_with_vector_databases_spark.streaming.queries import (
         serve_loop_rate,
     )
 
-    corpus = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    hamming = index in ("bq", "bq_ivf") and not rerank
+    centroids = None
+    if index in ("ivf", "bq_ivf"):
+        path, centroids = _ivf_layout(spark, SF_SMOKE)
+        corpus = spark.read.parquet(path)
+    else:
+        corpus = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    hit = F.col("hamming") == 0 if hamming else F.col("rank") == 1
     latencies: list = []
     results: list = []
+    cache: list = []
     q = serve_loop_rate(
         spark,
         corpus,
         k=3,
+        index=index,
+        centroids=centroids,
+        nprobe=2 if index == "ivf" else 4,
+        rerank=rerank,
         rows_per_second=40,
         latencies=latencies,
         sink=lambda df, epoch: results.extend(
-            df.filter(F.col("rank") == 1).select("query_id", "vec_id").collect()
-        ),
-        trigger_ms=250,
-    )
-    try:
-        deadline = time.time() + 30
-        while len(latencies) < 3 and time.time() < deadline:
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert len(latencies) >= 3, "stream produced too few scored batches"
-    assert all(lt < 20 for lt in latencies), latencies
-    assert results and all(r.query_id == r.vec_id for r in results)
-
-
-def test_serve_loop_rate_bq_latency_and_self_hit(spark):
-    """BQ-tier rate loop (registered r13): packed-code Hamming serving
-    over the cached code table — batches score, latencies bound, and
-    every query finds ITSELF at hamming 0 (its own code XOR itself);
-    the kernel ↔ expression bit-identity is pinned in test_ann.py."""
-    import time
-
-    from the_build_project_image_retrieval_with_vector_databases_spark.streaming.queries import (
-        serve_loop_rate_bq,
-    )
-
-    corpus = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    latencies: list = []
-    results: list = []
-    cache: list = []
-    q = serve_loop_rate_bq(
-        spark,
-        corpus,
-        k=3,
-        rows_per_second=40,
-        latencies=latencies,
-        sink=lambda df, epoch: results.extend(
-            df.filter(F.col("hamming") == 0)
-            .select("query_id", "vec_id")
-            .collect()
+            df.filter(hit).select("query_id", "vec_id").collect()
         ),
         trigger_ms=250,
         code_cache=cache,
@@ -250,14 +234,18 @@ def test_serve_loop_rate_bq_latency_and_self_hit(spark):
             time.sleep(0.5)
     finally:
         q.stop()
+        corpus.unpersist()
         for df in cache:
             df.unpersist()
     assert len(latencies) >= 3, "stream produced too few scored batches"
-    assert all(lt < 20 for lt in latencies), latencies
-    assert results, "no hamming-0 rows — self codes must match"
-    hit0 = {r.query_id for r in results if r.query_id == r.vec_id}
-    asked = {r.query_id for r in results}
-    assert hit0 == asked, "some query missed its own code at hamming 0"
+    assert all(0 < lt < 20 for lt in latencies), latencies
+    assert results, "sink must observe scored batches"
+    if hamming:
+        hit0 = {r.query_id for r in results if r.query_id == r.vec_id}
+        asked = {r.query_id for r in results}
+        assert hit0 == asked, "some query missed its own code at hamming 0"
+    else:
+        assert all(r.query_id == r.vec_id for r in results), "rank-1 must be self"
 
 
 def test_streaming_cms_accumulates_to_batch_sketch(spark, events_dir, tmp_path):
@@ -546,98 +534,3 @@ def test_serve_loop_rate_sparse_ids_and_bounded_pool(spark):
         assert r.query_id % 7 == 3 and r.query_id <= max_pool_id, (
             "query ids must come from the bounded lowest-id pool"
         )
-
-
-def test_serve_loop_rate_ivf_latency_and_self_hit(spark):
-    """IVF-tier continuous serving (r11, VERDICT r10 #3): the rate-source
-    loop over the materialized partitioned layout records bounded
-    per-batch latencies and every query's rank-1 neighbor is itself
-    (the query row's own inverted list is always its first probe, so
-    exclude_self=False ⇒ a distance-0 self hit — the IVF twin of the
-    flat loop's invariant)."""
-    import time
-
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        _ivf_layout,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.streaming.queries import (
-        serve_loop_rate_ivf,
-    )
-
-    path, centroids = _ivf_layout(spark, SF_SMOKE)
-    latencies: list = []
-    results: list = []
-    q = serve_loop_rate_ivf(
-        spark,
-        path,
-        centroids,
-        k=3,
-        nprobe=2,
-        rows_per_second=40,
-        latencies=latencies,
-        sink=lambda df, epoch: results.extend(
-            df.filter(F.col("rank") == 1).select("query_id", "vec_id").collect()
-        ),
-        trigger_ms=250,
-    )
-    try:
-        deadline = time.time() + 30
-        while len(latencies) < 3 and time.time() < deadline:
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert len(latencies) >= 3, "loop must complete several microbatches"
-    assert all(0 < l < 30 for l in latencies)
-    assert results, "sink must observe scored batches"
-    assert all(qid == vid for qid, vid in results), "rank-1 must be self"
-
-
-def test_serve_loop_rate_bq_ivf_latency_and_self_hit(spark):
-    """Composed BQ×IVF rate loop (r13): packed-code Hamming serving
-    restricted to probed inverted lists — batches score, latencies
-    bound, and every query finds ITSELF at hamming 0 (its own list is
-    always among its probes; kernel ↔ flat-Hamming parity is pinned in
-    test_ann.py)."""
-    import time
-
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        _ivf_layout,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.streaming.queries import (
-        serve_loop_rate_bq_ivf,
-    )
-
-    path, centroids = _ivf_layout(spark, SF_SMOKE)
-    latencies: list = []
-    results: list = []
-    cache: list = []
-    q = serve_loop_rate_bq_ivf(
-        spark,
-        path,
-        centroids,
-        k=3,
-        nprobe=4,
-        rows_per_second=40,
-        latencies=latencies,
-        sink=lambda df, epoch: results.extend(
-            df.filter(F.col("hamming") == 0)
-            .select("query_id", "vec_id")
-            .collect()
-        ),
-        trigger_ms=250,
-        code_cache=cache,
-    )
-    try:
-        deadline = time.time() + 30
-        while len(latencies) < 3 and time.time() < deadline:
-            time.sleep(0.5)
-    finally:
-        q.stop()
-        for df in cache:
-            df.unpersist()
-    assert len(latencies) >= 3, "stream produced too few scored batches"
-    assert all(lt < 20 for lt in latencies), latencies
-    assert results, "no hamming-0 rows — self codes must match"
-    hit0 = {r.query_id for r in results if r.query_id == r.vec_id}
-    asked = {r.query_id for r in results}
-    assert hit0 == asked, "some query missed its own code at hamming 0"

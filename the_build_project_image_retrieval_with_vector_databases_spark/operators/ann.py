@@ -95,7 +95,7 @@ def assign_centroids_arrow(
     the plan itself grows with k·D and falls over long before k reaches
     corpus-sized cluster counts (``k_for_corpus`` at 10¹⁰ docs is
     k ≈ 4·10⁷). This variant broadcasts the centroid matrix as a numpy
-    array inside a ``mapInPandas`` closure and scores each Arrow batch
+    array inside a ``mapInArrow`` closure and scores each Arrow batch
     with one B×D @ D×k matmul (argmin over ||c||² − 2·x·c; the ||x||²
     term is constant per row and cannot change the argmin) — the same
     CPU-side shape FAISS uses for its coarse quantizer. Still map-only,
@@ -108,38 +108,15 @@ def assign_centroids_arrow(
     ~1 ulp can tie-break differently — use the quantized-integer
     assignment (:func:`kmeans_lloyd_step`) where cross-engine exactness
     matters; this is the throughput path."""
-    import pandas as pd
-
     cents = np.asarray(centroids, dtype=np.float64)
     if cents.ndim != 2 or cents.shape[0] == 0:
         raise ValueError("assign_centroids_arrow requires a k×D centroid matrix")
-    c2 = (cents * cents).sum(axis=1)
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
     # mirror withColumn semantics: re-assignment over a df that already
     # carries 'centroid' (e.g. a previous pass) overwrites, never
     # duplicates the field
     if "centroid" in df.columns:
         df = df.drop("centroid")
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("centroid", IntegerType(), False)]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf = pdf.copy()
-                pdf["centroid"] = pd.Series([], dtype="int32")
-                yield pdf
-                continue
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            d = c2[None, :] - 2.0 * (x @ cents.T)
-            pdf = pdf.copy()
-            pdf["centroid"] = d.argmin(axis=1).astype("int32")
-            yield pdf
-
-    return df.mapInPandas(score, out_schema)
+    return _argmin_arrow(df, cents, vec_col, df.columns, "centroid")
 
 
 KMEANS_SCALE = 1 << 20
@@ -179,39 +156,57 @@ def assign_cids_arrow_int(
     ONLY the id, cid (and optionally dist2) cross back over the Arrow
     boundary — not the quantized vector (guide §4.1: pass only the
     columns the function needs, both directions)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
+    extra = None
+    if with_dist2:
+        extra = ("dist2", lambda x, d: d.min(axis=1) + (x * x).sum(axis=1))
+    return _argmin_arrow(
+        q.select(id_col, "qv"), np.asarray(cents_q, dtype=np.int64), "qv",
+        [id_col], "cid", extra,
     )
 
-    cents = np.asarray(cents_q, dtype=np.int64)
+
+def _argmin_arrow(
+    df: DataFrame,
+    cents: "np.ndarray",
+    vec_col: str,
+    keep: list[str],
+    out: str,
+    extra: tuple | None = None,
+) -> DataFrame:
+    """Nearest-centroid argmin per row as one ``mapInArrow`` pass: the
+    ``keep`` columns pass through uncopied, followed by ``out`` (int)
+    = first-min argmin of ‖c‖² − 2·x·c (the per-row ‖x‖² term shifts
+    every centroid equally, so it changes neither the argmin nor its
+    ties) and, with ``extra = (name, fn(x, d))``, one long column. The
+    decode dtype follows ``cents``: int64 centroids keep the arithmetic
+    exact integer (numpy int64 matmul, no BLAS float path), float64 ones
+    take the BLAS throughput path. Map-only; the centroid matrix rides
+    the closure (k·D·8 bytes per task)."""
+    import pyarrow as pa
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    from .knn import _vectors
+
     c2 = (cents * cents).sum(axis=1)
-    id_field = next(f for f in q.schema.fields if f.name == id_col)
-    fields = [id_field, StructField("cid", IntegerType(), False)]
-    if with_dist2:
-        fields.append(StructField("dist2", LongType(), False))
-    out_schema = StructType(fields)
+    fields = [df.schema[c] for c in keep]
+    fields.append(StructField(out, IntegerType(), False))
+    if extra is not None:
+        fields.append(StructField(extra[0], LongType(), False))
 
     def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                out = {id_col: pdf[id_col], "cid": pd.Series([], dtype="int32")}
-                if with_dist2:
-                    out["dist2"] = pd.Series([], dtype="int64")
-                yield pd.DataFrame(out)
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            x = np.asarray(pdf["qv"].tolist(), dtype=np.int64)
+            x = _vectors(batch, vec_col, cents.dtype)
             d = c2[None, :] - 2 * (x @ cents.T)
-            out = {id_col: pdf[id_col], "cid": d.argmin(axis=1).astype("int32")}
-            if with_dist2:
-                q2 = (x * x).sum(axis=1)
-                out["dist2"] = d.min(axis=1) + q2
-            yield pd.DataFrame(out)
+            arrays = [batch.column(c) for c in keep]
+            arrays.append(pa.array(d.argmin(axis=1), pa.int32()))
+            if extra is not None:
+                arrays.append(pa.array(extra[1](x, d), pa.int64()))
+            yield pa.RecordBatch.from_arrays(arrays, names=[f.name for f in fields])
 
-    return q.select(id_col, "qv").mapInPandas(score, out_schema)
+    cols = keep if vec_col in keep else [*keep, vec_col]
+    return df.select(*cols).mapInArrow(score, StructType(fields))
 
 
 def kmeans_lloyd_step(
@@ -303,7 +298,7 @@ def _lloyd_round_partials(
       constant cannot change the argmin OR its ties, so np.argmin's
       first-min tie-break equals ``array_position(dists,
       array_min(dists))`` over the full distances — the
-      ``_assign_arrow_int`` identity, parity-pinned in
+      :func:`_argmin_arrow` identity, parity-pinned in
       tests/test_staged_ops.py);
     - sums: per-task np.add.at partials (map-side aggregation — the
       shuffle carries ≤ k rows per task, same as the posexplode form's
@@ -326,13 +321,15 @@ def _lloyd_round_partials(
     ≤ k rows per task) and only k rows reach the driver — so the pull
     is bounded at ANY cluster width, parameterised, not tuned to
     local[32]."""
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.types import (
         IntegerType,
         LongType,
         StructField,
         StructType,
     )
+
+    from .knn import _vectors
 
     k = len(cents_q)
     dim = len(cents_q[0])
@@ -350,23 +347,22 @@ def _lloyd_round_partials(
         S = np.zeros((k, dim), dtype=np.int64)
         N = np.zeros(k, dtype=np.int64)
         seen = False
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
             seen = True
-            x = np.asarray(pdf["qv"].tolist(), dtype=np.int64)
+            x = _vectors(batch, "qv", np.int64)
             cid = (c2[None, :] - 2 * (x @ cents.T)).argmin(axis=1)
             np.add.at(S, cid, x)
             N += np.bincount(cid, minlength=k)
         if not seen:
             return
         nz = np.flatnonzero(N)
-        out = {"cid": nz.astype("int32"), "n": N[nz]}
-        for d in range(dim):
-            out[f"s{d}"] = S[nz, d]
-        yield pd.DataFrame(out)
+        arrays = [pa.array(nz, pa.int32()), pa.array(N[nz])]
+        arrays += [pa.array(S[nz, d]) for d in range(dim)]
+        yield pa.RecordBatch.from_arrays(arrays, names=out_schema.names)
 
-    part_df = q.select("qv").mapInPandas(partials, out_schema)
+    part_df = q.select("qv").mapInArrow(partials, out_schema)
     if n_parts is None:
         n_parts = q.rdd.getNumPartitions()
     if n_parts > FOLD_MAX_PARTITIONS:

@@ -785,7 +785,7 @@ def _semantic_assign(
     under decimal(38,0)'s 10³⁸), and raises with the offending id
     instead of mis-answering. (At D=64, den=10 the decimal bound binds:
     L ≈ 1.25·10⁸, ~119× the unit-vector quantization magnitude.)"""
-    from .ann import quantize_vec
+    from .ann import _argmin_arrow, quantize_vec
 
     den = max(1, int(threshold_den))
     q = spread(df).select(
@@ -818,7 +818,12 @@ def _semantic_assign(
         ),
     )
     if len(centroids_q) > LITERAL_K_MAX:
-        return _assign_arrow_int(q, centroids_q, id_col)
+        # same first-min int64 argmin as the literal form below (every
+        # term bounded by the guard above, so the matmul cannot wrap)
+        return _argmin_arrow(
+            q, np.asarray(centroids_q, dtype=np.int64), "qv", [id_col, "qv"],
+            "cid", ("n2", lambda x, d: (x * x).sum(axis=1)),
+        ).select(id_col, "cid", "qv", "n2")
     cents = F.array(
         *[F.array(*[F.lit(int(v)) for v in c]) for c in centroids_q]
     )
@@ -854,62 +859,6 @@ def _semantic_assign(
 # queries keep the pure-Catalyst no-Python-worker plan, every
 # corpus-sized k routes through the matmul.
 LITERAL_K_MAX = 8
-
-
-def _assign_arrow_int(
-    q: DataFrame, centroids_q: list[list[int]], id_col: str
-) -> DataFrame:
-    """Large-k twin of the literal argmin in :func:`_semantic_assign` —
-    value-IDENTICAL, not approximate: distances are exact int64
-    (|q−c|² = |q|² − 2·q·c + |c|², every term bounded by the
-    `_semantic_assign` guard so the int64 matmul cannot wrap; numpy
-    int64 matmul is exact integer arithmetic, no BLAS float path) and
-    ties break to the first minimum (np.argmin) exactly like
-    ``array_position``/the oracle's ORDER BY dist, cid. Map-only —
-    the centroid matrix rides the closure (k·D·8 bytes per executor),
-    the same shape as :func:`~.ann.assign_centroids_arrow`."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType
-
-    cents = np.asarray(centroids_q, dtype=np.int64)
-    c2 = (cents * cents).sum(axis=1)  # int64: k · D · L² < 2⁶² by guard
-
-    id_field = next(f for f in q.schema.fields if f.name == id_col)
-    out_schema = StructType(
-        [
-            id_field,
-            StructField("cid", IntegerType(), False),
-            StructField("qv", ArrayType(LongType()), False),
-            StructField("n2", LongType(), False),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "cid": pd.Series([], dtype="int32"),
-                        "qv": pdf["qv"],
-                        "n2": pd.Series([], dtype="int64"),
-                    }
-                )
-                continue
-            x = np.asarray(pdf["qv"].tolist(), dtype=np.int64)
-            n2 = (x * x).sum(axis=1)
-            # argmin over |x|² − 2·x·c + |c|²; |x|² is constant per row
-            d = c2[None, :] - 2 * (x @ cents.T)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cid": d.argmin(axis=1).astype("int32"),
-                    "qv": pdf["qv"],
-                    "n2": n2,
-                }
-            )
-
-    return q.mapInPandas(score, out_schema)
 
 
 def _sq_cos_gt(num: int, den: int):

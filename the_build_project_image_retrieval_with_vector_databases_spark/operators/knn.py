@@ -20,6 +20,12 @@ Spark-first physical strategy:
   ``WindowGroupLimit`` (Partial before the exchange, Final after), so
   only Q×k×partitions rows shuffle — the FAISS local-heap/merge shape
   comes out of the optimizer, not hand-rolled operators.
+- **Driver-held query matrix** → one ``mapInArrow`` block-scan kernel
+  (:func:`_block_scan`): decode each Arrow batch once, score it against
+  the queries (flat BLAS, exact left fold or Hamming, optionally per
+  IVF centroid group), cut per query to the top-k plus boundary ties,
+  and merge with one rank window. Every Arrow kNN function in this
+  module is a short spec over that kernel.
 
 At 100 TB the corpus never moves: queries broadcast, distances fuse into
 the scan stage, and only k rows per (query, partition) survive.
@@ -27,8 +33,16 @@ the scan stage, and only k rows per (query, partition) survive.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from .dedup import _pin
 
@@ -41,12 +55,35 @@ _METRICS = {
 }
 
 
-def _score(metric: str, a, b) -> tuple[Column, bool]:
+def _metric(metric: str) -> tuple:
     try:
-        fn, asc = _METRICS[metric]
+        return _METRICS[metric]
     except KeyError:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(_METRICS)}")
+
+
+def _score(metric: str, a, b) -> tuple[Column, bool]:
+    fn, asc = _metric(metric)
     return fn(a, b), asc
+
+
+def _rank(
+    cand: DataFrame,
+    k: int,
+    key: Column,
+    id_col: str,
+    by: tuple[str, ...] = ("query_id",),
+    asc: bool = True,
+) -> DataFrame:
+    """Global top-k per ``by`` group, ordered by ``(key, id)`` — the one
+    rank window behind every kNN join. Spark plans the ``rank <= k``
+    filter as a two-phase ``WindowGroupLimit``."""
+    w = Window.partitionBy(*by).orderBy(
+        key.asc() if asc else key.desc(), F.col(id_col).asc()
+    )
+    return cand.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
 
 
 def knn_single(
@@ -99,13 +136,254 @@ def knn_join(
     if exclude_self:
         joined = joined.filter(F.col(id_col) != F.col("query_id"))
     joined = joined.withColumn("dist", score)
-    order = [F.col("dist").asc() if asc else F.col("dist").desc(), F.col(id_col).asc()]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("__qvec")
+    return _rank(joined, k, F.col("dist"), id_col, asc=asc).drop("__qvec")
+
+
+# ---------------------------------------------------------------------------
+# Arrow block-scan kernel: the FAISS flat/IVF search shape for a
+# driver-held query set. Each Arrow batch of the corpus is decoded once,
+# scored against the queries in blocks, cut to a per-query top-k (plus
+# its boundary ties) and emitted; one rank window over the per-batch
+# candidates picks the global top-k. The corpus never shuffles; the
+# candidate volume is batches·Q·(k + boundary ties).
+# ---------------------------------------------------------------------------
+
+
+def _vectors(batch, name: str, dtype=np.float64) -> "np.ndarray":
+    """B×D matrix of the Arrow list column ``name`` — one flatten +
+    reshape, no per-row Python objects. Every list must be non-null and
+    of one length: a ragged column would otherwise reshape silently into
+    the wrong rows. ``flatten`` honours a sliced batch's offsets."""
+    col = batch.column(name)
+    flat = col.flatten()
+    if col.null_count or flat.null_count:
+        raise ValueError(f"column {name!r} holds a null vector or element")
+    lens = np.diff(np.asarray(col.offsets))
+    if len(lens) and (lens != lens[0]).any():
+        raise ValueError(
+            f"column {name!r} holds vectors of different lengths "
+            f"{np.unique(lens)[:4]}"
+        )
+    dim = int(lens[0]) if len(lens) else 0
+    return flat.to_numpy().astype(dtype, copy=False).reshape(len(col), dim)
+
+
+def _popcount64(x: "np.ndarray") -> "np.ndarray":
+    """SWAR popcount (Hacker's Delight §5-1) of a uint64 array — numpy
+    1.x has no ``bitwise_count``, and the word-parallel form beats a
+    byte LUT, whose per-byte gather dominates the XOR."""
+    x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
+    x = (x & np.uint64(0x3333333333333333)) + (
+        (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
     )
+    x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+    return ((x * np.uint64(0x0101010101010101)) >> np.uint64(56)).astype(
+        np.int64
+    )
+
+
+def _blas_dist(metric: str, qm: "np.ndarray"):
+    """B×Q distances by one matmul (l2 via ‖x‖² − 2x·q + ‖q‖²). BLAS
+    accumulation order differs from the left fold, so values carry
+    ~1-ulp noise — even between exact duplicate vectors, since GEMM
+    micro-kernels vary the path by row position."""
+    qn = (qm * qm).sum(axis=1)
+
+    def dist(x, qsel):
+        dots = x @ qm[qsel].T
+        if metric == "dot":
+            return dots
+        xx = (x * x).sum(axis=1)
+        if metric == "l2":
+            d = xx[:, None] - 2.0 * dots + qn[qsel][None, :]
+            return np.sqrt(np.maximum(d, 0.0))
+        return dots / np.maximum(
+            np.sqrt(qn[qsel])[None, :] * np.sqrt(xx)[:, None], 1e-12
+        )
+
+    return dist
+
+
+def _fold_dist(qm: "np.ndarray"):
+    """B×Q exact L2: the per-dimension float64 left fold
+    ``acc ← acc + (x_j − q_j)²`` — the same IEEE-754 operations in the
+    same order as the ``F.aggregate`` fold of ``functions.vector.l2_dist``
+    and DuckDB's ``list_reduce`` (float32 → float64 widening is exact,
+    sqrt is correctly rounded everywhere), so the doubles are
+    bit-identical to the expression path."""
+
+    def dist(x, qsel):
+        q = qm[qsel]
+        acc = np.zeros((x.shape[0], q.shape[0]))
+        for j in range(q.shape[1]):
+            dj = x[:, j, None] - q[None, :, j]
+            acc = acc + dj * dj
+        return np.sqrt(acc)
+
+    return dist
+
+
+def _hamming_dist(qc: "np.ndarray"):
+    """B×Q Hamming distances over packed uint64 halves: XOR + popcount
+    per half, summed. Small exact integers."""
+
+    def dist(x, qsel):
+        q = qc[qsel]
+        return sum(
+            _popcount64(x[:, h, None] ^ q[None, :, h]) for h in range(q.shape[1])
+        )
+
+    return dist
+
+
+def _cut(key: "np.ndarray", k: int, rounded: bool):
+    """(row, query) index pairs of every row whose key is within the
+    per-query k-th smallest — the k best plus EVERY boundary tie, so the
+    exact global ``(key, id)`` window re-cuts to the true top-k (a row
+    in the global top-k has fewer than k rows in its batch that beat
+    it). Non-finite keys (masked rows) never pass.
+
+    ``rounded`` serves BLAS distances, whose ulp noise would otherwise
+    break ties between equal distances by row position: the key is
+    rounded to 6 decimals, the class the rank window orders by, and the
+    bound is padded by 1.5 quanta. ``np.round`` is half-to-even while
+    ``F.round`` and the DuckDB oracle round HALF_UP, and at an exact .5
+    landing the two differ by one quantum — the pad makes the emitted
+    set a superset under either rule. 1.5 (not 1.0) so ulp rounding of
+    ``bound + pad`` never lands below a needed lattice point, while no
+    second lattice step is admitted."""
+    key = np.where(np.isfinite(key), key, np.inf)
+    pad = 0
+    if rounded:
+        key = np.round(key, 6)
+        pad = 1.5e-6
+    kk = min(k, key.shape[0])
+    bound = np.partition(key, kk - 1, axis=0)[kk - 1]
+    return np.nonzero((key <= bound + pad) & np.isfinite(key))
+
+
+def _probe_groups(probe_sets: list[list[int]], n_queries: int) -> dict:
+    """{centroid id: indices of the queries probing it}. Each probe set
+    is deduped — a repeated id would otherwise score and emit a query's
+    candidates twice, taking two ranks — and an all-empty input raises
+    instead of scanning nothing (``isin([])`` drops every row)."""
+    if len(probe_sets) != n_queries:
+        raise ValueError("probe_sets must align with query_ids")
+    by_cent: dict[int, list[int]] = {}
+    for qi, probes in enumerate(probe_sets):
+        for c in dict.fromkeys(int(c) for c in probes):
+            by_cent.setdefault(c, []).append(qi)
+    if not by_cent:
+        raise ValueError("every probe set is empty — nothing to scan")
+    return {c: np.asarray(v, dtype=np.int64) for c, v in by_cent.items()}
+
+
+def _query_matrix(query_ids, mat, dtype=np.float64, name="query_mat", width=None):
+    qids = np.asarray(query_ids, dtype=np.int64)
+    qm = np.asarray(mat, dtype=dtype)
+    if (
+        qm.ndim != 2
+        or qm.shape[0] != len(qids)
+        or len(qids) == 0
+        or (width is not None and qm.shape[1] != width)
+    ):
+        raise ValueError(
+            f"{name} must be a non-empty Q×{width or 'D'} matrix matching "
+            "query_ids"
+        )
+    return qids, qm
+
+
+def _block_scan(
+    df: DataFrame,
+    cols: list[str],
+    k: int,
+    qids: "np.ndarray",
+    feats,
+    dist,
+    carry: list[str],
+    passes=((None, None),),
+    masks=(),
+    sign: float = 1.0,
+    rounded: bool = False,
+    dist_field: StructField = StructField("dist", DoubleType(), False),
+) -> DataFrame:
+    """The one ``mapInArrow`` kNN kernel. Per Arrow batch of
+    ``df.select(*cols)``: ``feats(batch)`` decodes the B×F feature
+    matrix once; each pass ``(recon, probes)`` optionally transforms it
+    (``recon``, an exact float64 preprocessing such as PQ/SQ
+    reconstruction) and scores it with ``dist(x, query_selector)``,
+    either against all queries (``probes=None``, a flat scan) or per
+    centroid group against only the queries probing it
+    (``probes=(centroid_col, _probe_groups(...))`` — Σ|rows_c|·|probers_c|
+    work instead of B·Q). ``masks`` are ``(col, per-query values)``
+    pairs: a row whose ``col`` equals the query's value is dropped
+    (self exclusion, same-label exclusion). ``sign=-1`` ranks
+    similarities descending. Emits (query_id, *carry, dist[, tier]) —
+    ``tier`` is the pass index, present when there are several passes —
+    with ``dist`` the raw distance."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    fields = [StructField("query_id", LongType(), False)]
+    fields += [df.schema[c] for c in carry] + [dist_field]
+    tiered = len(passes) > 1
+    if tiered:
+        fields.append(StructField("tier", IntegerType(), False))
+    names = [f.name for f in fields]
+    dist_type = to_arrow_type(dist_field.dataType)
+
+    def groups(batch, probes):
+        if probes is None:
+            yield slice(None), slice(None)
+            return
+        centroid_col, by_cent = probes
+        cents = batch.column(centroid_col).to_numpy(zero_copy_only=False)
+        for c in np.unique(cents):
+            qsel = by_cent.get(int(c))
+            if qsel is not None:
+                yield np.flatnonzero(cents == c), qsel
+
+    def score(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            x0 = feats(batch)
+            at = np.arange(batch.num_rows)
+            masked = [
+                (batch.column(c).to_numpy(zero_copy_only=False), qv)
+                for c, qv in masks
+            ]
+            out = []
+            for tier, (recon, probes) in enumerate(passes):
+                x = x0 if recon is None else recon(x0)
+                for rows, qsel in groups(batch, probes):
+                    d = dist(x[rows], qsel)
+                    key = d * sign
+                    for vals, qv in masked:
+                        key[vals[rows][:, None] == qv[qsel][None, :]] = np.inf
+                    ri, qi = _cut(key, k, rounded)
+                    out.append((qids[qsel][qi], at[rows][ri], d[ri, qi], tier))
+            if not out:
+                continue
+            take = pa.array(np.concatenate([o[1] for o in out]))
+            arrays = [pa.array(np.concatenate([o[0] for o in out]), pa.int64())]
+            arrays += [batch.column(c).take(take) for c in carry]
+            arrays.append(
+                pa.array(np.concatenate([o[2] for o in out]), dist_type)
+            )
+            if tiered:
+                tiers = np.concatenate([np.full(len(o[1]), o[3]) for o in out])
+                arrays.append(pa.array(tiers, pa.int32()))
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+    # column pruning does not cross mapInArrow: project the used columns
+    # so the scan's ReadSchema never carries payload the kernel ignores
+    return df.select(*cols).mapInArrow(score, StructType(fields))
+
+
+def _vec_feats(vec_col: str):
+    return lambda batch: _vectors(batch, vec_col)
 
 
 def knn_join_arrow(
@@ -119,135 +397,37 @@ def knn_join_arrow(
     exclude_self: bool = False,
 ) -> DataFrame:
     """Arrow/BLAS kNN join for a DRIVER-HELD query set — the serving
-    throughput path (the matmul shape FAISS's flat search actually
-    runs). The expression-based :func:`knn_join` evaluates the distance
-    via Catalyst higher-order array functions, which are interpreted
-    per element — measured ~11 µs per (corpus, query) pair, fine for a
-    handful of queries, hopeless for a serving batch (2000×2000 pairs
-    = 45 s). Here the Q×D query matrix rides the ``mapInPandas``
-    closure; each Arrow batch scores ALL queries with one B×D @ D×Q
-    matmul and forwards only its per-query top-k (``argpartition``) —
-    per-partition heaps, exactly the FAISS block-scan — then one tiny
-    window rank over the per-partition candidates picks the global
-    top-k. Corpus never shuffles; candidate volume is
-    partitions·Q·(k + boundary-tie multiplicity) — the tie-safe cut
-    emits every row whose rounded key ties the k-boundary, so on a
-    corpus where many rows share one rounded distance the tie term is
-    unbounded in principle (the window still cuts exactly); for
-    non-degenerate corpora it is O(partitions·Q·k), independent of N.
+    throughput path (the matmul shape FAISS's flat search runs). The
+    expression-based :func:`knn_join` evaluates the distance through
+    interpreted higher-order array functions (~11 µs per (corpus, query)
+    pair); here each Arrow batch scores ALL queries with one B×D @ D×Q
+    matmul in the block-scan kernel and forwards only its per-query
+    top-k.
 
-    Caveats vs the exact operator (same contract as
-    :func:`~.ann.assign_centroids_arrow`): BLAS accumulation order
-    differs from the left-fold, so raw distances carry ~1-ulp noise —
-    including BETWEEN EXACT DUPLICATE VECTORS (GEMM micro-kernels vary
-    the accumulation path by row position; caught by the r12 serving
-    fuzz panel on generated corpora with a forced duplicate). Ties are
-    therefore handled at 6-decimal granularity, the same kept-rounded
-    class as the emitted display value: the global rank window orders
-    by (round(dist, 6), id), and each batch emits EVERY row whose
-    rounded distance ties the k-boundary (never an ``argpartition``
-    that cuts ties by raw ulps) — so two rows whose true distances tie
-    or differ below 5e-7 rank by id identically to the DuckDB oracle's
-    fold. Distinct rows separated by less than the rounding quantum but
-    straddling a rounding boundary remain the documented measure-zero
-    hazard.
-    With ``exclude_self=True`` the masked self row carries dist=inf and
-    can surface in the final top-k only when a partition holds ≤ k
-    finite rows — unreachable for a flat scan of any real corpus
-    (partitions ≫ k rows); the IVF kernel, whose probed subsets CAN be
-    that small, filters non-finite rows before yielding.
-    Use :func:`knn_join` where cross-engine exactness matters; this is
-    the throughput path. Output: (query_id, id_col, dist, rank) with
-    ``dist`` RAW (callers round for display).
+    Exactness contract: BLAS distances carry ~1-ulp noise, so ties are
+    handled at 6-decimal granularity — each batch emits every row whose
+    rounded distance ties the k-boundary and the global window orders by
+    ``(round(dist, 6), id)`` — so rows whose true distances tie or
+    differ below 5e-7 rank by id, like the DuckDB oracle's fold.
+    Distinct rows closer than the rounding quantum but straddling a
+    rounding boundary remain a measure-zero hazard. On a corpus where
+    many rows share one rounded distance the tie term of the candidate
+    volume is unbounded in principle (the window still cuts exactly).
+    ``exclude_self=True`` drops the row whose id equals the query id.
+    Use :func:`knn_join` where cross-engine exactness matters.
+
+    Output: (query_id, id_col, dist, rank) with ``dist`` RAW (callers
+    round for display).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    _, asc = _METRICS.get(metric, (None, None))
-    if asc is None:
-        raise ValueError(f"unknown metric {metric!r}; one of {sorted(_METRICS)}")
-    qm = np.asarray(query_mat, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    if qm.ndim != 2 or qm.shape[0] != len(qids) or len(qids) == 0:
-        raise ValueError("query_mat must be a non-empty Q×D matrix matching query_ids")
-    qn = (qm * qm).sum(axis=1)
-
-    id_field = next(f for f in corpus.schema.fields if f.name == id_col)
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("dist", DoubleType(), False),
-        ]
+    _, asc = _metric(metric)
+    qids, qm = _query_matrix(query_ids, query_mat)
+    cand = _block_scan(
+        corpus, [id_col, vec_col], k, qids, _vec_feats(vec_col),
+        _blas_dist(metric, qm), carry=[id_col],
+        masks=[(id_col, qids)] if exclude_self else (),
+        sign=1.0 if asc else -1.0, rounded=True,
     )
-    # Column pruning does not cross mapInPandas — project the two used
-    # columns explicitly so the parquet scan's ReadSchema never carries
-    # payload columns the kernel ignores (at 100 TB that's the
-    # difference between scanning two columns and scanning the table).
-    corpus = corpus.select(id_col, vec_col)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            if metric == "l2":
-                d = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ qm.T) + qn[None, :]
-                d = np.sqrt(np.maximum(d, 0.0))
-            elif metric == "dot":
-                d = x @ qm.T
-            else:  # cosine
-                xn = np.sqrt((x * x).sum(axis=1))
-                d = (x @ qm.T) / np.maximum(
-                    np.sqrt(qn)[None, :] * xn[:, None], 1e-12
-                )
-            if exclude_self:
-                d[ids[:, None] == qids[None, :]] = np.inf if asc else -np.inf
-            key = d if asc else -d
-            kk = min(k, key.shape[0])
-            part = np.argpartition(key, kk - 1, axis=0)[:kk]
-            # tie-safe cut: include EVERY row whose 6-decimal-rounded
-            # key ties the boundary — a raw argpartition cut breaks
-            # duplicate-vector ties by BLAS ulps, diverging from the
-            # oracle's (dist, id) order (r12 serving-fuzz catch)
-            kr = np.round(key, 6)
-            bound = np.take_along_axis(kr, part, axis=0).max(axis=0)
-            # one vectorized mask for ALL queries (no per-query python
-            # loop in the serving hot path); isfinite: a batch smaller
-            # than k would otherwise pull the masked self row
-            # (key=inf) through an inf boundary.  The boundary is
-            # padded by 1.5 rounding quanta: np.round is half-to-even
-            # while the global window key (F.round) and the DuckDB
-            # oracle round HALF_UP, and at an exact .5 landing the two
-            # rules differ by exactly one quantum — the pad makes the
-            # emitted set a superset under EITHER rule, and the exact
-            # global window re-cuts to the true top-k for free. 1.5
-            # (not 1.0) quanta so ulp-level rounding of `bound + pad`
-            # can never land one ulp BELOW a needed lattice point,
-            # while still admitting no second lattice step (ADVICE
-            # r13: strictly between one and two quanta).
-            mask = (kr <= bound[None, :] + 1.5e-6) & np.isfinite(kr)
-            ri, qi = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "query_id": qids[qi],
-                    id_col: ids[ri],
-                    "dist": d[ri, qi],
-                }
-            )
-
-    cand = corpus.mapInPandas(score, schema)
-    rdist = F.round(F.col("dist"), 6)
-    order = [
-        rdist.asc() if asc else rdist.desc(),
-        F.col(id_col).asc(),
-    ]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank(cand, k, F.round(F.col("dist"), 6), id_col, asc=asc)
 
 
 def knn_join_arrow_ivf(
@@ -264,117 +444,33 @@ def knn_join_arrow_ivf(
     """IVF-tier Arrow/BLAS kNN join — :func:`knn_join_arrow` with
     per-query inverted-list masking, the serving kernel for rates past
     the flat-scan knee (the batched analogue of the reference's
-    ``IndexIVFFlat.search``; its flat twin covers ``app.py:171``).
+    ``IndexIVFFlat.search``).
 
     Two pruning levels compose:
 
     1. **Scan**: the layout is filtered to the UNION of all probe sets
-       before ``mapInPandas`` — over the ``partitionBy(centroid)``
-       parquet layout that is partition PRUNING (only probed inverted
-       lists are read; at 100 TB only |∪probes|/k_cents of the corpus
-       leaves storage).
+       before the kernel — over the ``partitionBy(centroid)`` parquet
+       layout that is partition PRUNING (only probed inverted lists are
+       read).
     2. **FLOPs**: inside each Arrow batch, rows group by centroid and
        each group is scored ONLY against the queries probing that
-       centroid — Σ_c |rows_c|·|probers_c| ≈ (nprobe/k_cents)·N·Q
-       multiply-adds instead of the flat join's N·Q. This is the win
-       :func:`~.ann.ivf_search_batch`'s declarative form cannot get
-       locally (its interpreted fold costs ~µs/pair); here the masked
-       matmul keeps BLAS throughput.
+       centroid — ≈ (nprobe/k_cents)·N·Q multiply-adds instead of the
+       flat join's N·Q, at BLAS throughput.
 
-    Same exactness contract as :func:`knn_join_arrow` (BLAS ulps;
-    ties handled at 6-decimal granularity — tie-safe batch cut +
-    rounded-key rank window); per-query recall is the nprobe curve
-    (RECALL_CURVE.json). ``probe_sets[i]`` lists the centroid ids query
-    ``i`` probes. Output: (query_id, id_col, dist, rank ≤ k), candidate
-    volume ≈ batches·Q·k plus boundary-tie multiplicity (see
-    :func:`knn_join_arrow` — unbounded only on rounded-distance-
-    degenerate corpora) — independent of N otherwise."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    qm = np.asarray(query_mat, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    if qm.ndim != 2 or qm.shape[0] != len(qids) or len(qids) == 0:
-        raise ValueError("query_mat must be a non-empty Q×D matrix matching query_ids")
-    if len(probe_sets) != len(qids):
-        raise ValueError("probe_sets must align with query_ids")
-    qn = (qm * qm).sum(axis=1)
-    by_cent: dict[int, "np.ndarray"] = {}
-    for qi, probes in enumerate(probe_sets):
-        # dedupe: probe_sets is a public parameter — a repeated centroid
-        # id would score and emit the query's candidates twice, taking
-        # two ranks in the final window (nearest_centroids never
-        # duplicates, but callers may).
-        for c in dict.fromkeys(int(c) for c in probes):
-            by_cent.setdefault(c, []).append(qi)
-    by_cent = {c: np.asarray(v, dtype=np.int64) for c, v in by_cent.items()}
-    union_probes = sorted(by_cent)
-
-    id_field = next(f for f in layout.schema.fields if f.name == id_col)
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("dist", DoubleType(), False),
-        ]
+    Same exactness contract as :func:`knn_join_arrow`; per-query recall
+    is the nprobe curve (RECALL_CURVE.json). ``probe_sets[i]`` lists the
+    centroid ids query ``i`` probes (duplicates ignored; all-empty
+    raises). Output: (query_id, id_col, dist, rank ≤ k)."""
+    qids, qm = _query_matrix(query_ids, query_mat)
+    by_cent = _probe_groups(probe_sets, len(qids))
+    cand = _block_scan(
+        layout.filter(F.col(centroid_col).isin(sorted(by_cent))),
+        [id_col, centroid_col, vec_col], k, qids, _vec_feats(vec_col),
+        _blas_dist("l2", qm), carry=[id_col],
+        passes=[(None, (centroid_col, by_cent))],
+        masks=[(id_col, qids)] if exclude_self else (), rounded=True,
     )
-    pruned = layout.filter(
-        F.col(centroid_col).isin(union_probes)
-    ).select(id_col, centroid_col, vec_col)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cents = pdf[centroid_col].to_numpy()
-            for c in np.unique(cents):
-                qsel = by_cent.get(int(c))
-                if qsel is None:
-                    continue
-                sub = pdf[cents == c]
-                x = np.asarray(sub[vec_col].tolist(), dtype=np.float64)
-                ids = sub[id_col].to_numpy()
-                d = (
-                    (x * x).sum(axis=1)[:, None]
-                    - 2.0 * (x @ qm[qsel].T)
-                    + qn[qsel][None, :]
-                )
-                d = np.sqrt(np.maximum(d, 0.0))
-                if exclude_self:
-                    d[ids[:, None] == qids[qsel][None, :]] = np.inf
-                kk = min(k, d.shape[0])
-                part = np.argpartition(d, kk - 1, axis=0)[:kk]
-                # tie-safe cut at 6-decimal granularity + drop inf rows
-                # (masked self-matches): the raw-argpartition hazards
-                # are duplicate-vector BLAS-ulp tie breaks (r12
-                # serving-fuzz catch on the flat kernel — same GEMM
-                # here) and a probed inverted list with ≤ k finite rows
-                # surfacing the excluded self row (e.g. nprobe=1 on a
-                # small list).
-                dr = np.round(d, 6)
-                bound = np.take_along_axis(dr, part, axis=0).max(axis=0)
-                # one vectorized mask for the whole group's query set;
-                # boundary padded 1.5 quanta (np.round half-to-even vs
-                # the window/oracle's HALF_UP, ulp-safe sum — see
-                # knn_join_arrow)
-                mask = (dr <= bound[None, :] + 1.5e-6) & np.isfinite(dr)
-                ri, qi = np.nonzero(mask)
-                yield pd.DataFrame(
-                    {
-                        "query_id": qids[qsel][qi],
-                        id_col: ids[ri],
-                        "dist": d[ri, qi],
-                    }
-                )
-
-    cand = pruned.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("dist"), 6).asc(), F.col(id_col).asc()
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank(cand, k, F.round(F.col("dist"), 6), id_col)
 
 
 def knn_join_exact(
@@ -390,28 +486,14 @@ def knn_join_exact(
     recon=None,
 ) -> DataFrame:
     """Arrow kNN join that is BIT-EXACT with :func:`knn_join` (L2) — the
-    fast path for oracle-pinned evaluation queries.
-
-    :func:`knn_join_arrow` trades exactness for BLAS throughput (matmul
-    accumulation order ≠ the left fold, so distances differ in ulps and
-    ranks can flip on near-ties). Here the distance is instead
-    accumulated with an explicit per-dimension loop,
-    ``acc ← acc + (x_j − q_j)²`` in float64 — every elementwise op is
-    the SAME IEEE-754 binary64 operation in the SAME order as the
-    ``F.aggregate`` left fold of ``functions.vector.l2_dist`` and
-    DuckDB's ``list_reduce`` (float32 → float64 widening is exact, and
-    ``np.sqrt``/JVM ``Math.sqrt``/libm are all correctly rounded), so
-    the produced ``dist`` doubles are bit-identical to the expression
-    path while the D vectorized passes replace ~1 µs-per-element
-    interpreted HOF evaluation (measured ~60× on the 64-D fixtures).
-    Parity is pinned in ``tests/test_knn_exact.py``: full-frame equality
-    against :func:`knn_join` including distance bits.
-
-    Per-partition candidates are selected by ``np.lexsort`` on the
-    exact ``(dist, id)`` key — the id tie-break happens BEFORE the k
-    cut (unlike ``argpartition`` in the BLAS kernel), then one tiny
-    window rank over ≤ partitions·Q·k rows picks the global top-k with
-    the identical ordering. The corpus never shuffles.
+    fast path for oracle-pinned evaluation queries. Distances are the
+    exact per-dimension float64 left fold (:func:`_fold_dist`), so the
+    ``dist`` doubles equal the expression path's while D vectorized
+    passes replace ~1 µs-per-element interpreted evaluation. Each batch
+    emits its raw-distance top-k plus boundary ties and the global
+    window ranks by ``(dist, id)``. Parity is pinned in
+    ``tests/test_knn_exact.py``: full-frame equality against
+    :func:`knn_join` including distance bits.
 
     Options (all preserve exactness):
     - ``exclude_self`` — drop corpus rows whose id equals the query id.
@@ -425,72 +507,63 @@ def knn_join_exact(
 
     Output: (query_id, id_col[, label_col], dist, rank).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    qm = np.asarray(query_mat, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    if qm.ndim != 2 or qm.shape[0] != len(qids) or len(qids) == 0:
-        raise ValueError("query_mat must be a non-empty Q×D matrix matching query_ids")
-    qlab = None
+    qids, qm = _query_matrix(query_ids, query_mat)
+    masks = [(id_col, qids)] if exclude_self else []
+    carry = [id_col]
     if query_labels is not None:
         if label_col is None:
             raise ValueError("query_labels requires label_col")
         qlab = np.asarray(query_labels, dtype=np.int64)
         if qlab.shape != qids.shape:
             raise ValueError("query_labels must align with query_ids")
-
-    id_field = next(f for f in corpus.schema.fields if f.name == id_col)
-    fields = [StructField("query_id", LongType(), False), id_field]
-    cols = [id_col, vec_col]
+        masks.append((label_col, qlab))
     if label_col is not None:
-        fields.append(next(f for f in corpus.schema.fields if f.name == label_col))
-        cols.append(label_col)
-    fields.append(StructField("dist", DoubleType(), False))
-    schema = StructType(fields)
-    # Column pruning does not cross mapInPandas — project explicitly.
-    corpus = corpus.select(*cols)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            if recon is not None:
-                x = recon(x)
-            # exact left fold: acc_j = acc_{j-1} + (x_j - q_j)², float64
-            acc = np.zeros((x.shape[0], qm.shape[0]))
-            for j in range(qm.shape[1]):
-                dj = x[:, j, None] - qm[None, :, j]
-                acc = acc + dj * dj
-            d = np.sqrt(acc)
-            if exclude_self:
-                d[np.asarray(ids)[:, None] == qids[None, :]] = np.inf
-            if qlab is not None:
-                labs = pdf[label_col].to_numpy()
-                d[np.asarray(labs)[:, None] == qlab[None, :]] = np.inf
-            kk = min(k, d.shape[0])
-            out: dict[str, list] = {f.name: [] for f in fields}
-            for qi in range(len(qids)):
-                order = np.lexsort((ids, d[:, qi]))[:kk]
-                order = order[np.isfinite(d[order, qi])]
-                n = len(order)
-                out["query_id"].extend([int(qids[qi])] * n)
-                out[id_col].extend(ids[order].tolist())
-                if label_col is not None:
-                    out[label_col].extend(pdf[label_col].to_numpy()[order].tolist())
-                out["dist"].extend(d[order, qi].tolist())
-            yield pd.DataFrame(out)
-
-    cand = corpus.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
+        carry.append(label_col)
+    cand = _block_scan(
+        corpus, [*carry, vec_col], k, qids, _vec_feats(vec_col),
+        _fold_dist(qm), carry=carry, passes=[(recon, None)], masks=masks,
     )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _rank(cand, k, F.col("dist"), id_col)
+
+
+def _recall_hits(
+    cand: DataFrame, query_ids: list[int], k: int, id_col: str, n_tiers: int
+) -> DataFrame:
+    """Per query, the overlap of each approximate tier's top-k (tiers
+    1..n_tiers-1) with the exact tier's (tier 0): one row per query,
+    zero-hit queries included, with long columns ``__h1..``. ONE
+    repartition on ``query_id`` satisfies every later clustering
+    requirement (the rank window by (query_id, tier), the hit flags by
+    (query_id, id), the per-query sums), so Catalyst adds no further
+    shuffle."""
+    topk = _rank(
+        cand.repartition("query_id"), k, F.col("dist"), id_col,
+        by=("query_id", "tier"),
     )
+    flags = topk.groupBy("query_id", id_col).agg(
+        *[
+            F.max((F.col("tier") == t).cast("int")).alias(f"__t{t}")
+            for t in range(n_tiers)
+        ]
+    )
+    per_q = flags.groupBy("query_id").agg(
+        *[
+            F.sum(F.col("__t0") * F.col(f"__t{t}")).alias(f"__h{t}")
+            for t in range(1, n_tiers)
+        ]
+    )
+    base = cand.sparkSession.createDataFrame(
+        [(int(q),) for q in query_ids], "query_id long"
+    )
+    return base.join(F.broadcast(per_q), "query_id", "left")
+
+
+def _hits(col: Column, k: int) -> list[Column]:
+    n = F.coalesce(col, F.lit(0))
+    return [
+        n.cast("int").alias("n_hits"),
+        (n.cast("double") / F.lit(float(k))).alias("recall"),
+    ]
 
 
 def knn_recall_eval_exact(
@@ -503,116 +576,28 @@ def knn_recall_eval_exact(
     id_col: str = "vec_id",
     centroid_col: str = "centroid",
 ) -> DataFrame:
-    """Recall@k of the IVF tier vs exact search in ONE corpus scan —
-    the fold-into-one-Arrow-pass rewrite of the eval join pipeline
-    (the ``quantized_recall_eval`` precedent, VERDICT r10 #7: its
-    ADC-≡-L2-to-reconstruction fold took that query 4.95 → 0.97 s).
+    """Recall@k of the IVF tier vs exact search in ONE corpus scan.
+    Each Arrow batch of the materialized layout emits per-batch top-k
+    candidates for BOTH tiers from the block-scan kernel: tier 0 scores
+    every row, tier 1 only each centroid group against the queries
+    probing it. Distances use the exact left fold of
+    :func:`knn_join_exact`, so ranks — and (n_hits, recall) — equal the
+    two-scan pipeline's (exact kNN join ∩ IVF-pruned join). Self matches
+    are excluded in both tiers. ONE hash exchange carries the rank
+    windows and the hit counts (:func:`_recall_hits`).
 
-    The naive shape scans twice (exact kNN join + IVF-pruned join) and
-    intersects — 6 hash exchanges measured. Here each Arrow batch of
-    the materialized layout computes the exact left-fold distances
-    once, then emits per-partition top-k candidates for BOTH tiers:
-    ``tier=0`` over all rows, ``tier=1`` over the rows whose
-    ``centroid`` is in that query's probe set (masking a copy of the
-    same distance matrix — zero extra FLOPs). Downstream, ONE
-    repartition on ``query_id`` satisfies every later clustering
-    requirement (the per-tier rank windows partition by
-    ``(query_id, tier)``, the intersection count groups by
-    ``(query_id, vec_id)`` then ``query_id`` — all supersets of the
-    exchange key, so Catalyst inserts no further shuffle).
-
-    Distances use the same explicit per-dimension float64 fold as
-    :func:`knn_join_exact` (bit-exact with the expression path and
-    DuckDB's ``list_reduce``) and the same pre-cut ``(dist, id)``
-    lexsort, so ranks — and the resulting (n_hits, recall) — are
-    identical to the two-scan pipeline's. Self matches are excluded in
-    both tiers. Output: (query_id, n_hits int, recall double) for every
-    query, zero-hit queries included."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
+    Output: (query_id, n_hits int, recall double) for every query,
+    zero-hit queries included."""
+    qids, qm = _query_matrix(query_ids, query_mat)
+    by_cent = _probe_groups(probe_sets, len(qids))
+    cand = _block_scan(
+        layout, [id_col, centroid_col, vec_col], k, qids, _vec_feats(vec_col),
+        _fold_dist(qm), carry=[id_col],
+        passes=[(None, None), (None, (centroid_col, by_cent))],
+        masks=[(id_col, qids)],
     )
-
-    qm = np.asarray(query_mat, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    if qm.ndim != 2 or qm.shape[0] != len(qids) or len(qids) == 0:
-        raise ValueError("query_mat must be a non-empty Q×D matrix matching query_ids")
-    if len(probe_sets) != len(qids):
-        raise ValueError("probe_sets must align with query_ids")
-    probe_arr = [np.asarray(sorted(ps), dtype=np.int64) for ps in probe_sets]
-
-    id_field = next(f for f in layout.schema.fields if f.name == id_col)
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("dist", DoubleType(), False),
-            StructField("tier", IntegerType(), False),
-        ]
-    )
-    pruned = layout.select(id_col, centroid_col, vec_col)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            cents = pdf[centroid_col].to_numpy().astype(np.int64)
-            acc = np.zeros((x.shape[0], qm.shape[0]))
-            for j in range(qm.shape[1]):
-                dj = x[:, j, None] - qm[None, :, j]
-                acc = acc + dj * dj
-            d = np.sqrt(acc)
-            d[ids[:, None] == qids[None, :]] = np.inf  # exclude self
-            out: dict[str, list] = {
-                "query_id": [], id_col: [], "dist": [], "tier": []
-            }
-            kk = min(k, d.shape[0])
-            for qi in range(len(qids)):
-                col = d[:, qi]
-                for tier, mask in ((0, None), (1, np.isin(cents, probe_arr[qi]))):
-                    c = col if mask is None else np.where(mask, col, np.inf)
-                    order = np.lexsort((ids, c))[:kk]
-                    order = order[np.isfinite(c[order])]
-                    n = len(order)
-                    out["query_id"].extend([int(qids[qi])] * n)
-                    out[id_col].extend(ids[order].tolist())
-                    out["dist"].extend(c[order].tolist())
-                    out["tier"].extend([tier] * n)
-            yield pd.DataFrame(out)
-
-    cand = pruned.mapInPandas(score, schema).repartition("query_id")
-    w = Window.partitionBy("query_id", "tier").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    topk = cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    hits = (
-        topk.groupBy("query_id", id_col)
-        .agg(F.count("*").alias("n_tiers"))
-        .filter(F.col("n_tiers") == 2)
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    spark = layout.sparkSession
-    base = spark.createDataFrame(
-        [(int(q),) for q in query_ids], "query_id long"
-    )
-    return base.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n_hits"), F.lit(0)).cast("int").alias("n_hits"),
-        (
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
-            / F.lit(float(k))
-        ).alias("recall"),
-    )
+    hits = _recall_hits(cand, query_ids, k, id_col, 2)
+    return hits.select("query_id", *_hits(F.col("__h1"), k))
 
 
 def knn_multi_recon_recall(
@@ -626,117 +611,28 @@ def knn_multi_recon_recall(
 ) -> DataFrame:
     """Recall@k of N reconstruction tiers vs exact search in ONE corpus
     scan — the quantization-sweep generalization of
-    :func:`knn_recall_eval_exact` (r17 optimization; same fold-into-
-    one-Arrow-pass design, VERDICT r10 #7 precedent). ``recons`` is a
-    list of (tier_name, recon_fn) — each recon is the exact float64
-    numpy twin of its encode/reconstruct expression (PQ codeword / SQ
-    bin-midpoint). Each Arrow batch computes the exact left-fold
-    distances once per tier matrix (tier 0 = raw vectors), emits
-    per-partition (dist, id)-lexsorted top-k candidates per
-    (tier, query), then ONE repartition on ``query_id`` satisfies every
-    later clustering requirement (rank windows by (tier, query_id),
-    hit flags by (query_id, id), per-query counts — all supersets of
-    the exchange key, so Catalyst inserts no further shuffle).
-    Distances and ranks are bit-identical per tier to separate
-    :func:`knn_join_exact` passes: same per-dimension float64 fold,
-    same np.inf self-exclusion, same pre-cut lexsort, same global
-    window ordering. Self matches are excluded in every tier.
+    :func:`knn_recall_eval_exact`. ``recons`` is a list of
+    (tier_name, recon_fn), each recon the exact float64 numpy twin of
+    its encode/reconstruct expression (PQ codeword / SQ bin-midpoint).
+    Per Arrow batch the kernel runs one pass per tier (tier 0 = raw
+    vectors) with the exact left fold, so distances and ranks per tier
+    are bit-identical to separate :func:`knn_join_exact` passes. Self
+    matches are excluded in every tier. The per-tier hit counts come
+    from one row per query, unpivoted by a single ``inline`` generator,
+    so the corpus is scanned and folded once at any tier count.
 
     Output: (query_id, tier, n_hits int, recall double) for every
     query × non-exact tier, zero-hit queries included."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    qm = np.asarray(query_mat, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    if qm.ndim != 2 or qm.shape[0] != len(qids) or len(qids) == 0:
-        raise ValueError("query_mat must be a non-empty Q×D matrix matching query_ids")
+    qids, qm = _query_matrix(query_ids, query_mat)
     if not recons:
         raise ValueError("recons must name at least one tier")
-    tiers = [("__exact", None)] + [(str(t), fn) for t, fn in recons]
-
-    id_field = next(f for f in corpus.schema.fields if f.name == id_col)
-    schema = StructType(
-        [
-            StructField("tier", StringType(), False),
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("dist", DoubleType(), False),
-        ]
+    cand = _block_scan(
+        corpus, [id_col, vec_col], k, qids, _vec_feats(vec_col),
+        _fold_dist(qm), carry=[id_col],
+        passes=[(None, None)] + [(fn, None) for _t, fn in recons],
+        masks=[(id_col, qids)],
     )
-    pruned = corpus.select(id_col, vec_col)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x0 = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            out: dict[str, list] = {
-                "tier": [], "query_id": [], id_col: [], "dist": []
-            }
-            for tname, recon in tiers:
-                x = x0 if recon is None else recon(x0)
-                acc = np.zeros((x.shape[0], qm.shape[0]))
-                for j in range(qm.shape[1]):
-                    dj = x[:, j, None] - qm[None, :, j]
-                    acc = acc + dj * dj
-                d = np.sqrt(acc)
-                d[np.asarray(ids)[:, None] == qids[None, :]] = np.inf
-                kk = min(k, d.shape[0])
-                for qi in range(len(qids)):
-                    order = np.lexsort((ids, d[:, qi]))[:kk]
-                    order = order[np.isfinite(d[order, qi])]
-                    n = len(order)
-                    out["tier"].extend([tname] * n)
-                    out["query_id"].extend([int(qids[qi])] * n)
-                    out[id_col].extend(ids[order].tolist())
-                    out["dist"].extend(d[order, qi].tolist())
-            yield pd.DataFrame(out)
-
-    cand = pruned.mapInPandas(score, schema).repartition("query_id")
-    w = Window.partitionBy("tier", "query_id").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    topk = cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    flags = topk.groupBy("query_id", id_col).agg(
-        F.max(F.when(F.col("tier") == "__exact", 1).otherwise(0)).alias("__e"),
-        *[
-            F.max(F.when(F.col("tier") == t, 1).otherwise(0)).alias(f"__t{i}")
-            for i, (t, _fn) in enumerate(recons)
-        ],
-    )
-    per_q = flags.groupBy("query_id").agg(
-        *[
-            F.sum(F.col("__e") * F.col(f"__t{i}")).alias(f"__h{i}")
-            for i in range(len(recons))
-        ]
-    )
-    spark = corpus.sparkSession
-    base = spark.createDataFrame(
-        [(int(q),) for q in query_ids], "query_id long"
-    )
-    joined = base.join(F.broadcast(per_q), "query_id", "left")
-    # r18 (guide §1.1/§2.4, VERDICT r17 #1): unpivot the per-tier hit
-    # counts from the ONE row-per-query frame with a single generator
-    # instead of unioning one projection of ``joined`` per tier — each
-    # union branch re-derived the entire lazy subtree, physically
-    # duplicating the MapInPandas corpus fold + exchange + window once
-    # per tier (r17 after-plan: TWO corpus scans, no ReusedExchange).
-    # ``inline`` is a Generate node over the single subtree, so the
-    # corpus is scanned and folded exactly once at any tier count.
-    # Values are identical: same (tier, __h{i}) pairs, same coalesce/
-    # cast; only row order changes (per-query interleaved instead of
-    # per-tier blocks — immaterial, the output is an unordered frame).
+    hits = _recall_hits(cand, query_ids, k, id_col, len(recons) + 1)
     unpivot = F.inline(
         F.array(
             *[
@@ -744,18 +640,12 @@ def knn_multi_recon_recall(
                     F.lit(str(t)).alias("tier"),
                     F.col(f"__h{i}").alias("__h"),
                 )
-                for i, (t, _fn) in enumerate(recons)
+                for i, (t, _fn) in enumerate(recons, start=1)
             ]
         )
     )
-    return joined.select("query_id", unpivot).select(
-        "query_id",
-        "tier",
-        F.coalesce(F.col("__h"), F.lit(0)).cast("int").alias("n_hits"),
-        (
-            F.coalesce(F.col("__h"), F.lit(0)).cast("double")
-            / F.lit(float(k))
-        ).alias("recall"),
+    return hits.select("query_id", unpivot).select(
+        "query_id", "tier", *_hits(F.col("__h"), k)
     )
 
 
@@ -958,14 +848,7 @@ def mmr_rerank(
     ties broken by ascending id. Output: (query_id, rank, id, mmr_score
     raw double).
     """
-    import numpy as np
     import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
 
     if not (0 < lam_num <= lam_den):
         raise ValueError("lambda must be a fraction in (0, 1]")
@@ -988,7 +871,7 @@ def mmr_rerank(
     def rerank(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col, kind="stable").reset_index(drop=True)
         m = len(pdf)
-        x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+        x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         n = np.sqrt((x * x).sum(axis=1))
         sim = np.round(
             (x @ x.T) / np.maximum(n[:, None] * n[None, :], 1e-12), 6
@@ -1022,6 +905,17 @@ def mmr_rerank(
     return shortlist.groupBy(query_id_col).applyInPandas(rerank, out_schema)
 
 
+def _code_feats(code_cols: tuple[str, ...]):
+    def feats(batch):
+        halves = [batch.column(c).to_numpy() for c in code_cols]
+        return np.stack(halves, axis=1).view(np.uint64)
+
+    return feats
+
+
+_HAMMING = StructField("hamming", IntegerType(), False)
+
+
 def knn_join_arrow_hamming(
     codes: DataFrame,
     query_ids: list[int],
@@ -1032,101 +926,28 @@ def knn_join_arrow_hamming(
 ) -> DataFrame:
     """Arrow Hamming kNN join over BQ packed codes — the serving path
     of the binary-quantization tier (:func:`~.pq.bq_encode_cols`). Per
-    Arrow batch: XOR each packed int64 half (``code_cols`` — dim/32 of
-    them; two at 64-D) against every query's halves, SWAR popcount
-    (numpy 1.x has no ``bitwise_count``), per-query exact
-    (hamming, id) selection — a batch scans 16 BYTES per corpus row
-    (vs 256 for the float32 flat kernel), so at 100 TB the Hamming
-    rescore tier reads 6% of the flat tier's bytes at memory-bandwidth
-    throughput.
+    Arrow batch the block-scan kernel XORs each packed int64 half
+    (``code_cols`` — dim/32 of them; two at 64-D) against every query's
+    halves and popcounts — a batch scans 16 BYTES per corpus row (vs 256
+    for the float32 flat kernel).
 
     EXACTNESS (stronger than :func:`knn_join_arrow`'s contract):
-    distances are small INTEGERS (no BLAS ulps, no rounding), and ties
-    are COMMON, so each batch emits its k-smallest distances PLUS every
-    row tying the k-boundary exactly (a vectorized argpartition +
-    boundary-inclusive mask — one pass for the whole query set, never
-    a per-query Python sort loop: at serving Q≈256 the lexsort form
-    cost ~10× the popcount itself); the global window then ranks by
-    (hamming ASC, id ASC), so the result is bit-identical to the
-    expression form (``bq_hamming`` + TakeOrderedAndProject), pinned
-    in tests/test_ann.py. Output: (query_id, id_col, hamming, rank).
+    distances are small INTEGERS (no BLAS ulps, no rounding) and ties
+    are COMMON, so each batch emits its k smallest distances plus every
+    row tying the k-boundary exactly, in one vectorized pass for the
+    whole query set; the global window ranks by (hamming ASC, id ASC),
+    so the result is bit-identical to the expression form
+    (``bq_hamming`` + TakeOrderedAndProject), pinned in
+    tests/test_ann.py. Output: (query_id, id_col, hamming, rank).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    qids = np.asarray(query_ids, dtype=np.int64)
-    qc = np.asarray(query_codes, dtype=np.uint64)  # Q × n_halves
-    n_halves = len(code_cols)
-    if (
-        qc.ndim != 2
-        or qc.shape[0] != len(qids)
-        or qc.shape[1] != n_halves
-        or len(qids) == 0
-    ):
-        raise ValueError(
-            f"query_codes must be a non-empty Q×{n_halves} matrix "
-            "matching code_cols"
-        )
-
-    id_field = next(f for f in codes.schema.fields if f.name == id_col)
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("hamming", IntegerType(), False),
-        ]
+    qids, qc = _query_matrix(
+        query_ids, query_codes, np.uint64, "query_codes", len(code_cols)
     )
-    codes = codes.select(id_col, *code_cols)
-
-    def popcnt64(x: "np.ndarray") -> "np.ndarray":
-        # SWAR popcount (Hacker's Delight §5-1) on the uint64 array
-        # directly — measured 4.4× the 256-entry byte-LUT form, which
-        # expands every word to 8 bytes and pays a fancy-index gather
-        # per byte (the gather, not the XOR, dominated serving epochs)
-        x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
-        x = (x & np.uint64(0x3333333333333333)) + (
-            (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
-        )
-        x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-        return (
-            (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
-        ).astype(np.int64)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            # B×Q XOR per half, SWAR popcount, summed over halves
-            d = None
-            for h, col in enumerate(code_cols):
-                half = pdf[col].to_numpy().astype(np.int64).view(np.uint64)
-                dh = popcnt64(half[:, None] ^ qc[None, :, h])
-                d = dh if d is None else d + dh
-            kk = min(k, d.shape[0])
-            # integer distances: the k-boundary tie set is EXACT (no
-            # rounding quantum needed) — emit k rows plus every
-            # boundary tie per query in one vectorized mask, and let
-            # the global (hamming, id) window cut deterministically
-            part = np.argpartition(d, kk - 1, axis=0)[:kk]
-            bound = np.take_along_axis(d, part, axis=0).max(axis=0)
-            ri, qi = np.nonzero(d <= bound[None, :])
-            yield pd.DataFrame(
-                {
-                    "query_id": qids[qi],
-                    id_col: ids[ri],
-                    "hamming": d[ri, qi].astype(np.int32),
-                }
-            )
-
-    cand = codes.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col(id_col).asc()
+    cand = _block_scan(
+        codes, [id_col, *code_cols], k, qids, _code_feats(code_cols),
+        _hamming_dist(qc), carry=[id_col], dist_field=_HAMMING,
     )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank(cand, k, F.col("hamming"), id_col)
 
 
 def knn_join_arrow_hamming_ivf(
@@ -1141,113 +962,29 @@ def knn_join_arrow_hamming_ivf(
 ) -> DataFrame:
     """Composed BQ×IVF serving kernel — Hamming scan WITHIN probed
     inverted lists: :func:`knn_join_arrow_hamming` with
-    :func:`knn_join_arrow_ivf`'s per-query list masking. This is the
-    production shape the bq_tier measurement points at
-    (SERVE_LATENCY.json): the two tiers' levers MULTIPLY — IVF prunes
-    which lists are read at all (at 100 TB, unprobed lists never leave
-    storage; over a materialized ``partitionBy(centroid)`` code layout
-    the centroid INSET filter is parquet partition pruning) and BQ
-    cuts the bytes per probed row 16× (16 vs 256 at 64-D), so probed
-    scan bytes drop by (nprobe/k_cents)·(1/16) vs a flat float scan.
-    Per-epoch popcount work likewise drops to
-    Σ_c |rows_c|·|probers_c| ≈ (nprobe/k_cents)·N·Q word-ops.
+    :func:`knn_join_arrow_ivf`'s per-query list masking. The two tiers'
+    levers multiply: IVF prunes which lists are read at all (over a
+    materialized ``partitionBy(centroid)`` code layout the centroid
+    INSET filter is parquet partition pruning) and BQ cuts the bytes
+    per probed row 16× (16 vs 256 at 64-D); popcount work is
+    ≈ (nprobe/k_cents)·N·Q word-ops.
 
     Exactness contract of the Hamming kernel (integer distances, all
-    k-boundary ties emitted, global (hamming, id) rank window);
-    recall is the IVF nprobe curve × the BQ sign-quantization curve
+    k-boundary ties emitted, global (hamming, id) rank window); recall
+    is the IVF nprobe curve × the BQ sign-quantization curve
     (RECALL_CURVE.json prices both). Output:
     (query_id, id_col, hamming, rank ≤ k)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    qids = np.asarray(query_ids, dtype=np.int64)
-    qc = np.asarray(query_codes, dtype=np.uint64)
-    n_halves = len(code_cols)
-    if (
-        qc.ndim != 2
-        or qc.shape[0] != len(qids)
-        or qc.shape[1] != n_halves
-        or len(qids) == 0
-    ):
-        raise ValueError(
-            f"query_codes must be a non-empty Q×{n_halves} matrix "
-            "matching code_cols"
-        )
-    if len(probe_sets) != len(qids):
-        raise ValueError("probe_sets must align with query_ids")
-    by_cent: dict[int, "np.ndarray"] = {}
-    for qi, probes in enumerate(probe_sets):
-        for c in dict.fromkeys(int(c) for c in probes):
-            by_cent.setdefault(c, []).append(qi)
-    by_cent = {c: np.asarray(v, dtype=np.int64) for c, v in by_cent.items()}
-    union_probes = sorted(by_cent)
-    if not union_probes:
-        # all-empty probe sets would silently return an empty result
-        # (isin([]) filters every row) — fail loudly like the other
-        # degenerate-input guards (ADVICE r13)
-        raise ValueError("every probe set is empty — nothing to scan")
-
-    id_field = next(f for f in layout.schema.fields if f.name == id_col)
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("hamming", IntegerType(), False),
-        ]
+    qids, qc = _query_matrix(
+        query_ids, query_codes, np.uint64, "query_codes", len(code_cols)
     )
-    pruned = layout.filter(
-        F.col(centroid_col).isin(union_probes)
-    ).select(id_col, centroid_col, *code_cols)
-
-    def popcnt64(x: "np.ndarray") -> "np.ndarray":
-        # same SWAR form as knn_join_arrow_hamming
-        x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
-        x = (x & np.uint64(0x3333333333333333)) + (
-            (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
-        )
-        x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-        return (
-            (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
-        ).astype(np.int64)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cents = pdf[centroid_col].to_numpy()
-            for c in np.unique(cents):
-                qsel = by_cent.get(int(c))
-                if qsel is None:
-                    continue
-                sub = pdf[cents == c]
-                ids = sub[id_col].to_numpy()
-                d = None
-                for h, col in enumerate(code_cols):
-                    half = (
-                        sub[col].to_numpy().astype(np.int64).view(np.uint64)
-                    )
-                    dh = popcnt64(half[:, None] ^ qc[qsel][None, :, h])
-                    d = dh if d is None else d + dh
-                kk = min(k, d.shape[0])
-                part = np.argpartition(d, kk - 1, axis=0)[:kk]
-                bound = np.take_along_axis(d, part, axis=0).max(axis=0)
-                ri, qi = np.nonzero(d <= bound[None, :])
-                yield pd.DataFrame(
-                    {
-                        "query_id": qids[qsel][qi],
-                        id_col: ids[ri],
-                        "hamming": d[ri, qi].astype(np.int32),
-                    }
-                )
-
-    cand = pruned.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col(id_col).asc()
+    by_cent = _probe_groups(probe_sets, len(qids))
+    cand = _block_scan(
+        layout.filter(F.col(centroid_col).isin(sorted(by_cent))),
+        [id_col, centroid_col, *code_cols], k, qids, _code_feats(code_cols),
+        _hamming_dist(qc), carry=[id_col],
+        passes=[(None, (centroid_col, by_cent))], dist_field=_HAMMING,
     )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank(cand, k, F.col("hamming"), id_col)
 
 
 def knn_join_arrow_hamming_ivf_rescored(
@@ -1281,13 +1018,11 @@ def knn_join_arrow_hamming_ivf_rescored(
     from the IVF tier's (nprobe/k_cents)·N·Q·D multiply-adds to
     Q·k·overfetch·D — the shortlist, not the probed lists. Recall is
     the nprobe curve × the BQ-overfetch rescore curve (both priced in
-    RECALL_CURVE.json; ``bq_overfetch`` shows rescore at ov=16 buying
-    raw Hamming's 0.33 back to ≈0.70 on the fixture corpus).
+    RECALL_CURVE.json).
 
     The rescore stage is pure Catalyst (broadcast the tiny shortlist,
     ``zip_with``/``aggregate`` left-fold in codegen) — no second
-    Python/Arrow hop. Exactness contract of the exact kernels: rank
-    window on (round(dist, 6), id). Output:
+    Python/Arrow hop. Rank window on (round(dist, 6), id). Output:
     (query_id, id_col, dist, rank ≤ k) with ``dist`` the exact L2
     recomputed in double — RAW, callers round for display.
     """
@@ -1305,7 +1040,7 @@ def knn_join_arrow_hamming_ivf_rescored(
         code_cols=code_cols,
         centroid_col=centroid_col,
     )
-    union_probes = sorted({int(c) for ps in probe_sets for c in ps})
+    union_probes = sorted(_probe_groups(probe_sets, len(query_ids)))
     spark = floats.sparkSession
     qdf = spark.createDataFrame(
         [(int(q), [float(x) for x in v]) for q, v in zip(query_ids, query_vecs)],
@@ -1332,11 +1067,6 @@ def knn_join_arrow_hamming_ivf_rescored(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("dist"), 6).asc(), F.col(id_col).asc()
-    )
-    return (
-        resc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "dist", "rank")
+    return _rank(resc, k, F.round(F.col("dist"), 6), id_col).select(
+        "query_id", id_col, "dist", "rank"
     )

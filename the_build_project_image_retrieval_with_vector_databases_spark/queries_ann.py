@@ -2270,9 +2270,7 @@ def q_bq_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(BQ_K)
 
 
-def _oracle_bq_hamming_topk(
-    dim: int = EMB_DIM, k: int = BQ_K, train_n: int = BQ_TRAIN_N
-) -> str:
+def _oracle_bq_hamming_topk(dim: int = EMB_DIM, k: int = BQ_K) -> str:
     """Re-derives the entire BQ pipeline in SQL: integer threshold
     sums over the training slice, both packed halves for EVERY row
     (shifts stay ≤ bit 31 — DuckDB's checked ``<<`` overflows at 63),
@@ -2293,7 +2291,7 @@ def _oracle_bq_hamming_topk(
         )
 
     return f"""
-WITH train AS (SELECT embedding FROM embeddings WHERE vec_id < {train_n}),
+WITH train AS (SELECT embedding FROM embeddings WHERE vec_id < {BQ_TRAIN_N}),
 tn AS (SELECT count(*) AS n FROM train),
 idx AS (SELECT unnest(range(1, {dim + 1})) AS i),
 thr0 AS (SELECT i,

@@ -180,64 +180,175 @@ def serve_loop(
     return writer.start()
 
 
+_SERVE_TIERS = ("flat", "ivf", "bq", "bq_ivf")
+
+# BQ thresholds train on this many lowest-id corpus rows (the payload
+# pool's head) — the same training slice the registered bq queries use.
+_BQ_TRAIN_ROWS = 16
+
+
 def serve_loop_rate(
     spark,
     corpus: DataFrame,
     k: int = 5,
+    *,
+    index: str = "flat",
+    centroids: list[list[float]] | None = None,
+    nprobe: int = 4,
+    rerank: int = 0,
     rows_per_second: int = 100,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    centroid_col: str = "centroid",
     latencies: list | None = None,
     sink: Callable[[DataFrame, int], None] | None = None,
     trigger_ms: int = 500,
     payload_pool: int = 256,
+    code_cache: list | None = None,
 ) -> StreamingQuery:
-    """Continuous serving harness (§2.9 latency path): the built-in
-    ``rate`` source emits query arrivals at a fixed rate; each microbatch
-    maps arrivals onto a BOUNDED pool of corpus vectors
-    (``value % pool_size`` where pool_size = min(payload_pool, corpus
-    rows) — a stand-in for a real request payload, which would carry
-    its own vector), scores the whole batch against
-    the cached corpus with the Arrow/BLAS kNN join
-    (:func:`~..operators.knn.knn_join_arrow` — one matmul per corpus
-    partition, per-partition top-k heaps, tiny global rank; the
-    expression-based exact join is ~11 µs/pair interpreted and cannot
-    sustain a serving rate), and records END-TO-END latency per batch
-    (oldest arrival timestamp → results materialized) into
-    ``latencies``.
+    """Continuous serving harness (§2.9 latency path) for every index
+    tier of :func:`~..search.search`: the built-in ``rate`` source emits
+    query arrivals at a fixed rate; each microbatch maps arrivals onto a
+    BOUNDED pool of corpus vectors (``value % pool_size``, pool_size =
+    min(payload_pool, corpus rows) — a stand-in for a real request
+    payload), scores the distinct pooled queries with the tier's Arrow
+    kernel, and records END-TO-END latency per batch (oldest arrival
+    timestamp → results materialized) into ``latencies``. Results go
+    to ``sink(out, epoch_id)``, or to a noop write.
 
     The measured quantity is the serving SLO of the reference's
     interactive search (``app.py:171``) under steady load: trigger
-    interval + queue wait + score + sink. At scale the corpus side is
-    the same partitioned/cached table every executor already holds —
-    the per-epoch work that scales with arrival rate is one Q×D
-    broadcast and a partitions·Q·k candidate rank. The request payload
-    pool is HARNESS state (real requests carry vectors) and is
-    SCALE-HONEST: the ``payload_pool`` lowest-id corpus vectors, one
-    ``TakeOrderedAndProject`` collect of pool×D floats at loop start —
-    driver memory is O(pool·D) regardless of corpus size (never the
-    r7 full-corpus O(N·D) collect). Pooled vectors are real corpus
-    rows, so scored distances keep the corpus' neighbor structure; the
-    measured path (:func:`knn_join_arrow`) is unchanged."""
+    interval + queue wait + score + sink. The pool is the ``payload_pool``
+    lowest-id corpus rows, collected once at loop start
+    (``TakeOrderedAndProject``), so driver memory is O(pool·D) at any
+    corpus size; emitted query ids are the pooled rows' REAL ids, so a
+    rank-1 self-hit holds on any id space.
+
+    Tiers (``index``):
+
+    - ``flat`` — :func:`~..operators.knn.knn_join_arrow` over the
+      cached ``corpus``: one matmul per Arrow batch.
+    - ``ivf`` — :func:`~..operators.knn.knn_join_arrow_ivf` over the
+      cached ``corpus`` read from a ``partitionBy(centroid)`` layout;
+      each pooled query probes its ``nprobe`` nearest ``centroids``, so
+      per-epoch multiply-adds drop by ~nprobe/k_cents at the recall
+      point RECALL_CURVE.json prices.
+    - ``bq`` — per-dim integer thresholds trained on the
+      ``_BQ_TRAIN_ROWS`` lowest-id rows; the corpus is projected ONCE to
+      dim/32 packed BIGINT halves and the code table cached (16
+      bytes/row at 64-D vs 256 for floats); each epoch is one
+      XOR/popcount pass (:func:`~..operators.knn.knn_join_arrow_hamming`).
+    - ``bq_ivf`` — the packed codes keep the centroid column and each
+      query scans only its probed lists
+      (:func:`~..operators.knn.knn_join_arrow_hamming_ivf`). With
+      ``rerank > 0`` the Hamming shortlist of ``k·rerank`` is re-ranked
+      by exact float L2 (:func:`~..operators.knn.
+      knn_join_arrow_hamming_ivf_rescored`) over a float copy cached
+      range-partitioned by centroid.
+
+    ``flat``/``ivf`` cache ``corpus`` itself; read it once and unpersist
+    it when the loop is done. The code (and float) tables the ``bq``
+    tiers derive are appended to ``code_cache`` so the caller can
+    unpersist them once the loop stops — the StreamingQuery outlives
+    this call."""
     import time
 
-    from ..operators.knn import knn_join_arrow
+    from ..operators import knn
+    from ..operators.ann import nearest_centroids
+    from ..operators.pq import bq_encode_cols, bq_encode_query, bq_train_thresholds
 
-    corpus = corpus.cache()
-    pool_rows = (
+    if index not in _SERVE_TIERS:
+        raise ValueError(f"unknown index {index!r}; one of {_SERVE_TIERS}")
+    probed = index in ("ivf", "bq_ivf")
+    if probed and centroids is None:
+        raise ValueError(f"index={index!r} needs the layout's centroids")
+    if rerank and index != "bq_ivf":
+        raise ValueError("rerank > 0 applies to index='bq_ivf' only")
+    if index in ("flat", "ivf"):
+        corpus = corpus.cache()
+    pool = (
         corpus.select(id_col, vec_col)
         .orderBy(F.col(id_col).asc())
         .limit(payload_pool)
         .collect()
     )
-    # pooled (corpus id, vector) pairs — emitted query_ids are the REAL
-    # ids of the pooled rows, so rank-1 self-hits hold for any id space
-    # (sparse or dense), not just 0..N-1 fixtures
-    pool_ids = [int(r[0]) for r in pool_rows]
-    payload = [list(r[1]) for r in pool_rows]
-    n = len(payload)
-    if n == 0:
+    pool_ids = [int(r[0]) for r in pool]
+    payload = [list(r[1]) for r in pool]
+    if not payload:
         raise ValueError("corpus is empty — nothing to serve")
+    probes = None
+    if probed:
+        probes = [nearest_centroids(centroids, v, nprobe) for v in payload]
+
+    def cached(df: DataFrame) -> DataFrame:
+        df = df.cache()
+        df.count()  # materialize before the loop starts
+        if code_cache is not None:
+            code_cache.append(df)
+        return df
+
+    def pick(xs, sel):
+        return [xs[q] for q in sel]
+
+    if index == "flat":
+        def score(sel):
+            return knn.knn_join_arrow(
+                corpus, pick(pool_ids, sel), pick(payload, sel), k=k,
+                id_col=id_col, vec_col=vec_col,
+            )
+    elif index == "ivf":
+        def score(sel):
+            return knn.knn_join_arrow_ivf(
+                corpus, pick(pool_ids, sel), pick(payload, sel),
+                pick(probes, sel), k=k, id_col=id_col, vec_col=vec_col,
+                centroid_col=centroid_col,
+            )
+    else:
+        train = payload[:_BQ_TRAIN_ROWS]
+        thr = bq_train_thresholds(train)
+        halves = bq_encode_cols(thr, len(train), vec_col)
+        names = tuple(f"bq_h{i}" for i in range(len(halves)))
+        pool_codes = [bq_encode_query(v, thr, len(train)) for v in payload]
+        keep = [id_col, centroid_col] if probed else [id_col]
+        # full parallelism before caching: the packed table inherits the
+        # float corpus' split count but each partition is 16× smaller,
+        # and the parent's few splits would leave cores idle every epoch
+        codes = cached(
+            corpus.select(*keep, *[c.alias(n) for n, c in zip(names, halves)])
+            .repartition(spark.sparkContext.defaultParallelism)
+        )
+        if index == "bq":
+            def score(sel):
+                return knn.knn_join_arrow_hamming(
+                    codes, pick(pool_ids, sel), pick(pool_codes, sel), k=k,
+                    id_col=id_col, code_cols=names,
+                )
+        elif not rerank:
+            def score(sel):
+                return knn.knn_join_arrow_hamming_ivf(
+                    codes, pick(pool_ids, sel), pick(pool_codes, sel),
+                    pick(probes, sel), k=k, id_col=id_col, code_cols=names,
+                    centroid_col=centroid_col,
+                )
+        else:
+            # range-partitioned BY CENTROID: an in-memory scan cannot
+            # partition-prune, but cached-batch min/max stats skip the
+            # batches whose centroid range misses the probe filter
+            floats = cached(
+                corpus.select(id_col, centroid_col, vec_col).repartitionByRange(
+                    spark.sparkContext.defaultParallelism, F.col(centroid_col)
+                )
+            )
+
+            def score(sel):
+                return knn.knn_join_arrow_hamming_ivf_rescored(
+                    codes, floats, pick(pool_ids, sel), pick(payload, sel),
+                    pick(pool_codes, sel), pick(probes, sel), k=k,
+                    overfetch=rerank, id_col=id_col, vec_col=vec_col,
+                    code_cols=names, centroid_col=centroid_col,
+                )
+
+    n = len(payload)
 
     def score_batch(batch: DataFrame, epoch_id: int) -> None:
         # one job reads the arrival floor AND answers the empty check —
@@ -249,423 +360,7 @@ def serve_loop_rate(
         ).first()
         if agg.t0 is None:
             return
-        qidx = sorted(set(int(v) for v in agg.qids))
-        out = knn_join_arrow(
-            corpus,
-            [pool_ids[q] for q in qidx],
-            [payload[q] for q in qidx],
-            k=k,
-            id_col=id_col,
-            vec_col=vec_col,
-            exclude_self=False,
-        )
-        if sink is not None:
-            sink(out, epoch_id)
-        else:
-            out.write.format("noop").mode("overwrite").save()
-        if latencies is not None:
-            latencies.append(time.time() - agg.t0.timestamp())
-
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .writeStream.foreachBatch(score_batch)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
-    )
-
-
-# Registry of cached IVF serving layouts, keyed by (application id,
-# path) — serve_loop_rate_ivf reuses one cached DataFrame per path
-# instead of pinning a fresh copy per invocation (executor storage
-# memory has no other release path once the returned StreamingQuery is
-# stopped). The application-id component makes a stop/recreate of the
-# SparkSession a cache MISS rather than a DataFrame bound to a dead
-# JVM context. A rewrite of the layout AT THE SAME PATH in the same
-# session must still be preceded by ``release_layout_cache(path)`` —
-# the cache cannot see the storage change (the snapshot it pinned is
-# the one it serves), which is also why ``build_ivf_layout``-style
-# rebuilds in scripts call the release first.
-_LAYOUT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def release_layout_cache(layout_path: str | None = None) -> None:
-    """Unpersist cached serving layout(s): every entry for the given
-    path (across any sessions this process has run), or all entries.
-    Call before rebuilding a layout at a cached path."""
-    keys = [
-        key
-        for key in list(_LAYOUT_CACHE)
-        if layout_path is None or key[1] == layout_path
-    ]
-    for key in keys:
-        df = _LAYOUT_CACHE.pop(key, None)
-        if df is not None:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing pinned anymore
-
-
-def serve_loop_rate_ivf(
-    spark,
-    layout_path: str,
-    centroids: list[list[float]],
-    k: int = 5,
-    nprobe: int = 4,
-    rows_per_second: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    latencies: list | None = None,
-    sink: Callable[[DataFrame, int], None] | None = None,
-    trigger_ms: int = 500,
-    payload_pool: int = 256,
-    cache_layout: bool = True,
-) -> StreamingQuery:
-    """IVF-tier continuous serving — :func:`serve_loop_rate` with the
-    flat Arrow/BLAS scan replaced by the inverted-list kernel
-    (:func:`~..operators.knn.knn_join_arrow_ivf`) over the materialized
-    ``partitionBy(centroid)`` layout. This is the engine's answer to
-    "what serves the rates past the flat-scan knee" (VERDICT r8/r9/r10
-    #3): per epoch, only the probed inverted lists are READ (parquet
-    partition pruning — at 100 TB the unprobed corpus never leaves
-    storage) and each list is scored only against the queries probing
-    it, so per-epoch multiply-adds drop by ~nprobe/k_cents at the
-    recall point RECALL_CURVE.json prices.
-
-    Harness contract identical to :func:`serve_loop_rate`: bounded
-    payload pool (pool·D driver floats, real corpus rows), per-query
-    probe sets precomputed once driver-side over the pooled vectors
-    (pool × k_cents numpy — the FAISS coarse-quantizer step), END-TO-END
-    per-batch latency (oldest arrival → results materialized) appended
-    to ``latencies``.
-
-    ``cache_layout`` (default True) holds the layout in executor
-    storage memory — the SAME memory model as the flat loop (which
-    caches 100% of the corpus), so the flat-vs-ivf knee comparison
-    isolates the FLOP masking. Measured on the 200k corpus: uncached,
-    per-epoch parquet decode (~100 MB) dominates and IVF lands ON the
-    flat knee (p50 2.15-2.65 s); cached, only the masked matmul
-    remains. Set False to measure the cold/storage-read path — at
-    100 TB a serving fleet pins hot inverted lists and pays this path
-    only on probe misses.
-
-    Cached layouts are REUSED across invocations in the same session
-    (one registry entry per path — the serve_latency.py sweep's
-    warm-up + per-rate runs re-read the same path, and per-run
-    ``.cache()`` calls would otherwise accumulate in executor storage
-    memory with no release path); call :func:`release_layout_cache`
-    when a sweep is done with a path."""
-    import time
-
-    from ..operators.ann import nearest_centroids
-    from ..operators.knn import knn_join_arrow_ivf
-
-    if cache_layout:
-        cache_key = (spark.sparkContext.applicationId, layout_path)
-        layout = _LAYOUT_CACHE.get(cache_key)
-        if layout is None:
-            layout = spark.read.parquet(layout_path).cache()
-            _LAYOUT_CACHE[cache_key] = layout
-    else:
-        layout = spark.read.parquet(layout_path)
-    pool_rows = (
-        layout.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(payload_pool)
-        .collect()
-    )
-    pool_ids = [int(r[0]) for r in pool_rows]
-    payload = [list(r[1]) for r in pool_rows]
-    n = len(payload)
-    if n == 0:
-        raise ValueError("layout is empty — nothing to serve")
-    pool_probes = [nearest_centroids(centroids, v, nprobe) for v in payload]
-
-    def score_batch(batch: DataFrame, epoch_id: int) -> None:
-        agg = batch.agg(
-            F.min("timestamp").alias("t0"),
-            F.collect_list(F.col("value") % n).alias("qids"),
-        ).first()
-        if agg.t0 is None:
-            return
-        qidx = sorted(set(int(v) for v in agg.qids))
-        out = knn_join_arrow_ivf(
-            layout,
-            [pool_ids[q] for q in qidx],
-            [payload[q] for q in qidx],
-            [pool_probes[q] for q in qidx],
-            k=k,
-            id_col=id_col,
-            vec_col=vec_col,
-            exclude_self=False,
-        )
-        if sink is not None:
-            sink(out, epoch_id)
-        else:
-            out.write.format("noop").mode("overwrite").save()
-        if latencies is not None:
-            latencies.append(time.time() - agg.t0.timestamp())
-
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .writeStream.foreachBatch(score_batch)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
-    )
-
-
-def serve_loop_rate_bq(
-    spark,
-    corpus: DataFrame,
-    k: int = 5,
-    rows_per_second: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    latencies: list | None = None,
-    sink: Callable[[DataFrame, int], None] | None = None,
-    trigger_ms: int = 500,
-    payload_pool: int = 256,
-    train_n: int = 16,
-    code_cache: list | None = None,
-) -> StreamingQuery:
-    """Binary-quantization-tier continuous serving — the 5th tier of
-    the rate-loop family (:func:`serve_loop_rate` = flat,
-    :func:`serve_loop_rate_ivf` = inverted lists). Setup, ONCE per
-    loop: train per-dim integer thresholds on the ``train_n`` lowest-id
-    corpus rows, project the corpus to dim/32 packed BIGINT halves
-    (:func:`~..operators.pq.bq_encode_cols` — codegen'd, zero shuffle)
-    and CACHE the code table (16 bytes/row at 64-D vs 256 for floats —
-    the BQ memory model is the tier's point: 6% of the flat tier's
-    cached bytes). Per epoch: encode is already done, so the batch is
-    one XOR/popcount pass (:func:`~..operators.knn.
-    knn_join_arrow_hamming`) over the cached codes — no float matmul
-    at all. Harness contract identical to the flat loop: bounded
-    payload pool of real corpus rows, query codes precomputed
-    driver-side (pool × dim/32 ints), END-TO-END per-batch latency
-    appended to ``latencies``.
-
-    Per-epoch FLOP shape vs the other tiers at corpus size N: flat
-    does N·Q·D multiply-adds; IVF (nprobe/k_cents)·N·Q·D; BQ does
-    N·Q·(D/32) XOR+popcounts over 16× fewer bytes — the bandwidth
-    lever FAISS's ``IndexBinaryFlat`` rescoring tiers use. Recall is
-    the BQ curve (sign quantization), not exact — production rescores
-    the Hamming shortlist with full floats (``pq_rerank_topk``'s
-    pattern); this loop measures the shortlist scan itself."""
-    import time
-
-    from ..operators.knn import knn_join_arrow_hamming
-    from ..operators.pq import (
-        bq_encode_cols,
-        bq_encode_query,
-        bq_train_thresholds,
-    )
-
-    pool_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(payload_pool)
-        .collect()
-    )
-    pool_ids = [int(r[0]) for r in pool_rows]
-    payload = [list(r[1]) for r in pool_rows]
-    n = len(payload)
-    if n == 0:
-        raise ValueError("corpus is empty — nothing to serve")
-    train = payload[: min(train_n, n)]
-    thr = bq_train_thresholds(train)
-    halves = bq_encode_cols(thr, len(train), vec_col)
-    names = [f"bq_h{i}" for i in range(len(halves))]
-    # repartition to full parallelism before caching: the packed table
-    # inherits the float corpus' parquet split count, but each code
-    # partition is 16× smaller — without this, a 32-core box scans the
-    # cached codes on the parent scan's 8-16 partitions and leaves
-    # half the cores idle every epoch (one-time 48 MB shuffle at 2M)
-    codes = (
-        corpus.select(
-            id_col, *[c.alias(nm) for nm, c in zip(names, halves)]
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-        .cache()
-    )
-    codes.count()  # materialize the packed table before the loop starts
-    if code_cache is not None:
-        # hand the cached code table back so the caller can unpersist
-        # it once the loop stops (the loop itself cannot — the
-        # StreamingQuery outlives this call)
-        code_cache.append(codes)
-    pool_codes = [bq_encode_query(v, thr, len(train)) for v in payload]
-
-    def score_batch(batch: DataFrame, epoch_id: int) -> None:
-        agg = batch.agg(
-            F.min("timestamp").alias("t0"),
-            F.collect_list(F.col("value") % n).alias("qids"),
-        ).first()
-        if agg.t0 is None:
-            return
-        qidx = sorted(set(int(v) for v in agg.qids))
-        out = knn_join_arrow_hamming(
-            codes,
-            [pool_ids[q] for q in qidx],
-            [pool_codes[q] for q in qidx],
-            k=k,
-            id_col=id_col,
-            code_cols=tuple(names),
-        )
-        if sink is not None:
-            sink(out, epoch_id)
-        else:
-            out.write.format("noop").mode("overwrite").save()
-        if latencies is not None:
-            latencies.append(time.time() - agg.t0.timestamp())
-
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .writeStream.foreachBatch(score_batch)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
-    )
-
-
-def serve_loop_rate_bq_ivf(
-    spark,
-    layout_path: str,
-    centroids: list[list[float]],
-    k: int = 5,
-    nprobe: int = 4,
-    rows_per_second: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_col: str = "centroid",
-    latencies: list | None = None,
-    sink: Callable[[DataFrame, int], None] | None = None,
-    trigger_ms: int = 500,
-    payload_pool: int = 256,
-    train_n: int = 16,
-    code_cache: list | None = None,
-    rescore_overfetch: int | None = None,
-) -> StreamingQuery:
-    """Composed BQ×IVF continuous serving — the production shape the
-    bq_tier measurement points at: encode the materialized
-    ``partitionBy(centroid)`` layout to packed codes ONCE (keeping the
-    centroid column), cache, and per epoch run the Hamming scan only
-    within each query's probed inverted lists
-    (:func:`~..operators.knn.knn_join_arrow_hamming_ivf`). The two
-    tiers' levers multiply: per-epoch popcount work ≈
-    (nprobe/k_cents)·N·Q word-ops, and at storage scale probed scan
-    bytes are (nprobe/k_cents)·(1/16) of a flat float scan (over a
-    packed-code parquet layout the centroid INSET filter is partition
-    pruning). Harness contract identical to the other rate loops.
-
-    ``rescore_overfetch`` (r14) turns on the PRODUCTION shape: Hamming
-    shortlist at ``k·rescore_overfetch`` within probed lists → exact
-    float re-rank of the shortlist
-    (:func:`~..operators.knn.knn_join_arrow_hamming_ivf_rescored`).
-    The float layout is cached alongside the codes for the loop (the
-    steady-state serving memory model matches the IVF tier; at storage
-    scale only shortlist rows inside already-probed lists are
-    fetched). Recall at the measured operating point is priced in
-    RECALL_CURVE.json ``bq_ivf_rescored``."""
-    import time
-
-    from ..operators.ann import nearest_centroids
-    from ..operators.knn import (
-        knn_join_arrow_hamming_ivf,
-        knn_join_arrow_hamming_ivf_rescored,
-    )
-    from ..operators.pq import (
-        bq_encode_cols,
-        bq_encode_query,
-        bq_train_thresholds,
-    )
-
-    layout = spark.read.parquet(layout_path)
-    pool_rows = (
-        layout.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(payload_pool)
-        .collect()
-    )
-    pool_ids = [int(r[0]) for r in pool_rows]
-    payload = [list(r[1]) for r in pool_rows]
-    n = len(payload)
-    if n == 0:
-        raise ValueError("layout is empty — nothing to serve")
-    train = payload[: min(train_n, n)]
-    thr = bq_train_thresholds(train)
-    halves = bq_encode_cols(thr, len(train), vec_col)
-    names = [f"bq_h{i}" for i in range(len(halves))]
-    codes = (
-        layout.select(
-            id_col, centroid_col,
-            *[c.alias(nm) for nm, c in zip(names, halves)],
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-        .cache()
-    )
-    codes.count()
-    if code_cache is not None:
-        code_cache.append(codes)
-    floats = None
-    if rescore_overfetch is not None:
-        # range-partition the float cache BY CENTROID: in-memory scans
-        # cannot partition-prune like parquet, but cached-batch min/max
-        # stats do skip batches whose centroid range misses the isin
-        # predicate — round-robin caching would put every centroid in
-        # every batch and force a full 2M-row decode per epoch (the
-        # first rescored sweep measured exactly that: +2 s/epoch)
-        floats = (
-            layout.select(id_col, centroid_col, vec_col)
-            .repartitionByRange(
-                spark.sparkContext.defaultParallelism, F.col(centroid_col)
-            )
-            .cache()
-        )
-        floats.count()
-        if code_cache is not None:
-            code_cache.append(floats)
-    pool_codes = [bq_encode_query(v, thr, len(train)) for v in payload]
-    pool_probes = [nearest_centroids(centroids, v, nprobe) for v in payload]
-
-    def score_batch(batch: DataFrame, epoch_id: int) -> None:
-        agg = batch.agg(
-            F.min("timestamp").alias("t0"),
-            F.collect_list(F.col("value") % n).alias("qids"),
-        ).first()
-        if agg.t0 is None:
-            return
-        qidx = sorted(set(int(v) for v in agg.qids))
-        if rescore_overfetch is not None:
-            out = knn_join_arrow_hamming_ivf_rescored(
-                codes,
-                floats,
-                [pool_ids[q] for q in qidx],
-                [payload[q] for q in qidx],
-                [pool_codes[q] for q in qidx],
-                [pool_probes[q] for q in qidx],
-                k=k,
-                overfetch=rescore_overfetch,
-                id_col=id_col,
-                vec_col=vec_col,
-                code_cols=tuple(names),
-                centroid_col=centroid_col,
-            )
-        else:
-            out = knn_join_arrow_hamming_ivf(
-                codes,
-                [pool_ids[q] for q in qidx],
-                [pool_codes[q] for q in qidx],
-                [pool_probes[q] for q in qidx],
-                k=k,
-                id_col=id_col,
-                code_cols=tuple(names),
-                centroid_col=centroid_col,
-            )
+        out = score(sorted(set(int(v) for v in agg.qids)))
         if sink is not None:
             sink(out, epoch_id)
         else:
