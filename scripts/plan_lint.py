@@ -19,6 +19,9 @@ the patterns that are NEVER acceptable at 100 TB:
   class (r13): a nullable hash key makes joins infer isnotnull(key),
   pushed below the projection that computes it, double-evaluating the
   hash per row. Keys must be coalesce-annotated non-nullable.
+- a tokenize (``split(trim(lower(``) inside a ``lambdafunction`` body —
+  the inline-tokenize class: the lambda re-splits the text once per
+  array element. Tokenize in its own projection instead.
 
 Also recorded per query (trend data, not gates): hash-exchange count,
 BNLJ count, Arrow-Python operator count, and whole-stage-codegen span
@@ -116,22 +119,28 @@ def _final_counts(df) -> dict:
     }
 
 
-def _hash_calls(line: str) -> set[str]:
-    """Balanced-paren extraction of every md5(...)/conv(...) call
-    substring on a plan line — the unit the recomputation check
-    compares across Filter and Project nodes."""
-    out: set[str] = set()
-    for m in re.finditer(r"\b(md5|conv)\(", line):
-        depth, i = 0, m.start()
+def _call_spans(line: str, call: str) -> list[tuple[int, int]]:
+    """Balanced-paren ``(start, end)`` spans of every ``call(...)``
+    (``call`` is a regex ending at the opening paren) on a plan line."""
+    spans: list[tuple[int, int]] = []
+    for m in re.finditer(call, line):
+        depth = 0
         for j in range(m.end() - 1, len(line)):
             if line[j] == "(":
                 depth += 1
             elif line[j] == ")":
                 depth -= 1
                 if depth == 0:
-                    out.add(line[i : j + 1])
+                    spans.append((m.start(), j + 1))
                     break
-    return out
+    return spans
+
+
+def _hash_calls(line: str) -> set[str]:
+    """Every md5(...)/conv(...) call substring on a plan line — the
+    unit the recomputation check compares across Filter and Project
+    nodes."""
+    return {line[i:j] for i, j in _call_spans(line, r"\b(md5|conv)\(")}
 
 
 def _recomputed_hash_filters(plan: str) -> int:
@@ -151,6 +160,29 @@ def _recomputed_hash_filters(plan: str) -> int:
     return sum(
         1 for line in filter_lines if _hash_calls(line) & project_calls
     )
+
+
+TOKENIZE = "split(trim(lower("
+
+
+def _tokenize_in_lambda(plan: str) -> int:
+    """Count tokenize subtrees (``functions.text.tokens``) that sit
+    INSIDE a ``lambdafunction(...)`` body — the inline-tokenize class:
+    a lambda that captures the tokenize expression re-runs the regex
+    split once per array element (e.g. once per shingle), O(tokens²)
+    per document. The tokenize's own empty-token filter lambda does not
+    count (the split is the filter's argument, outside the lambda
+    span), and neither do top-level repeats."""
+    n = 0
+    for line in plan.splitlines():
+        if TOKENIZE not in line:
+            continue
+        spans = _call_spans(line, r"\blambdafunction\(")
+        n += sum(
+            any(i < m.start() < j for i, j in spans)
+            for m in re.finditer(re.escape(TOKENIZE), line)
+        )
+    return n
 
 
 def lint_one(df) -> dict:
@@ -181,6 +213,9 @@ def lint_one(df) -> dict:
             # (without recomputing it next to a projection) is not a
             # violation (ADVICE r13 tightening).
             "filter_recomputed_hash": _recomputed_hash_filters(plan),
+            # the inline-tokenize class: tokenize in its own projection
+            # (operators/dedup.py::doc_shingles), never inside a lambda
+            "tokenize_in_lambda": _tokenize_in_lambda(plan),
         }
     )
     return row
@@ -207,7 +242,11 @@ def main() -> None:
             violations.append(name)
             continue
         out[name] = row
-        if row["forbidden_total"] or row["filter_recomputed_hash"]:
+        if (
+            row["forbidden_total"]
+            or row["filter_recomputed_hash"]
+            or row["tokenize_in_lambda"]
+        ):
             violations.append(name)
         print(f"# lint {name}: {row}", file=sys.stderr)
 

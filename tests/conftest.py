@@ -15,6 +15,23 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def load_plan_lint():
+    """scripts/plan_lint.py as a module (scripts/ is not a package)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "plan_lint",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "scripts",
+            "plan_lint.py",
+        ),
+    )
+    plan_lint = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(plan_lint)
+    return plan_lint
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark(app_name="tests", shuffle_partitions=8)

@@ -149,3 +149,141 @@ def test_interval_join_matches_bruteforce(spark_global, views, purchases):
         if vu == pu and pep > vep and pep <= vep + 3600
     )
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# Adversarial text inputs for the n-gram operators: documents shorter than
+# n tokens, the empty string, whitespace-only text, null text, and one
+# token repeated (every shingle identical → one distinct gram). Expected
+# values come from a brute-force Python reference of the same contracts.
+# ---------------------------------------------------------------------------
+
+import hashlib
+import re
+
+from the_build_project_image_retrieval_with_vector_databases_spark.operators.decontam import (
+    BLOOM_HEX_STARTS,
+    bloom_decontaminate,
+    contamination_eval_split,
+)
+from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
+    ngram_novelty_score,
+)
+
+_ADV_CORPUS = [
+    (1, "alpha beta"),                     # shorter than n
+    (2, ""),                               # empty
+    (3, "   \t\n  "),                      # whitespace only
+    (4, None),                             # null
+    (5, "spam spam spam spam spam spam spam"),  # one distinct gram
+    (6, " Spam spam\tSPAM  spam spam "),   # same gram after the fold
+    (7, "the quick brown fox jumps over the lazy dog"),
+    (8, "quick brown fox jumps"),          # exactly n=4 tokens
+    (9, "lazy dog lazy dog lazy dog"),
+]
+_ADV_BENCH = [
+    (100, "spam spam spam spam"),
+    (101, "the quick brown fox jumps"),
+    (102, ""),
+    (103, None),
+    (104, " \t "),
+    (105, "alpha beta"),
+    (106, "dog lazy dog lazy dog"),
+]
+
+
+def _py_tokens(text):
+    """tokens(): lower, trim spaces, split on Java \\s+, drop empties."""
+    if text is None:
+        return []
+    return [t for t in re.split(r"[ \t\n\x0b\f\r]+", text.lower().strip(" ")) if t]
+
+
+def _py_grams(text, n):
+    toks = _py_tokens(text)
+    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _md5(s):
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+
+def _rows(df, cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_ngram_overlap_adversarial_text_matches_bruteforce(spark):
+    n = 4
+    out = ngram_overlap(_docs(spark, _ADV_CORPUS), _docs(spark, _ADV_BENCH), n=n)
+    bench = {i: _py_grams(t, n) for i, t in _ADV_BENCH}
+    all_bench = set().union(*bench.values())
+    want = []
+    for i, t in _ADV_CORPUS:
+        g = _py_grams(t, n)
+        shared = g & all_bench
+        if shared:
+            frac = len(shared) / len(g)
+            n_bench = sum(1 for bg in bench.values() if bg & g)
+            want.append((i, len(g), len(shared), n_bench, frac, frac >= 0.2))
+    cols = ["doc_id", "n_grams", "n_shared", "n_bench_docs", "overlap_frac", "severe"]
+    assert _rows(out, cols) == sorted(want)
+    assert {w[0] for w in want} == {5, 6, 7, 8, 9}
+
+
+@pytest.mark.parametrize("m_bits", [64, 65536])
+def test_bloom_decontaminate_adversarial_text_matches_bruteforce(spark, m_bits):
+    n = 4
+
+    def positions(gram):
+        h = _md5(gram)
+        return [int(h[s - 1 : s + 7], 16) % m_bits for s in BLOOM_HEX_STARTS]
+
+    out = bloom_decontaminate(
+        _docs(spark, _ADV_CORPUS), _docs(spark, _ADV_BENCH), n=n, m_bits=m_bits
+    )
+    bits = {p for _, t in _ADV_BENCH for g in _py_grams(t, n) for p in positions(g)}
+    want = []
+    for i, t in _ADV_CORPUS:
+        g = _py_grams(t, n)
+        maybe = sum(1 for x in g if all(p in bits for p in positions(x)))
+        if maybe:
+            want.append((i, len(g), maybe, maybe / len(g)))
+    assert _rows(out, ["doc_id", "n_grams", "n_maybe", "maybe_frac"]) == sorted(want)
+    # no false negatives: every exactly-shared doc is flagged
+    assert {5, 6, 7, 8, 9} <= {w[0] for w in want}
+
+
+def test_contamination_eval_split_adversarial_text_matches_bruteforce(spark):
+    n = 4
+    out = contamination_eval_split(
+        _docs(spark, _ADV_CORPUS), _docs(spark, _ADV_BENCH), n=n
+    )
+    corpus = set().union(*(_py_grams(t, n) for _, t in _ADV_CORPUS))
+    want = []
+    for i, t in _ADV_BENCH:
+        g = _py_grams(t, n)
+        dirty = len(g & corpus)
+        want.append((i, len(g), dirty, dirty >= 1, dirty / max(len(g), 1)))
+    cols = ["doc_id", "n_grams", "n_dirty_grams", "dirty", "dirty_frac"]
+    # one row per eval document, including the empty/blank/null ones
+    assert _rows(out, cols) == sorted(want)
+
+
+def test_ngram_novelty_score_adversarial_text_matches_bruteforce(spark):
+    n = 3
+    out = ngram_novelty_score(_docs(spark, _ADV_CORPUS), n=n)
+    grams = {i: _py_grams(t, n) for i, t in _ADV_CORPUS}
+    first: dict = {}
+    for i in sorted(grams):
+        for g in grams[i]:
+            first.setdefault(g, i)
+    want = []
+    for i, g in grams.items():
+        if g:
+            novel = sum(1 for x in g if first[x] == i)
+            frac = novel / len(g)
+            want.append((i, len(g), novel, frac, frac < 0.5))
+    cols = ["doc_id", "n_grams", "n_novel", "novelty_frac", "is_stale"]
+    # zero-gram documents have no row; the repeated-token doc has one gram
+    assert _rows(out, cols) == sorted(want)
+    assert (5, 1, 1, 1.0, False) in want and (6, 1, 0, 0.0, True) in want

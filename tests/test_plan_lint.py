@@ -17,7 +17,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, load_plan_lint
 
 # one representative per plan mechanism: scan-agg, window, broadcast
 # join, shuffle join, explode, banded dedup join, IVF partition prune,
@@ -43,6 +43,63 @@ _SUBSET = [
 ]
 
 
+# hand-written plan lines in Spark's executedPlan().toString() form
+_TOK = (
+    "filter(split(trim(lower(text#1), None), \\s+, -1), "
+    "lambdafunction(NOT (lambda x_1#7 = ), lambda x_1#7, false))"
+)
+
+
+@pytest.mark.parametrize(
+    "plan, expected",
+    [
+        # tokenize in its own projection: its filter lambda follows the
+        # split, it does not contain it
+        (f"+- Project [doc_id#0L, {_TOK} AS __toks#6]", 0),
+        # shingles over the projected column: lambdas, no tokenize inside
+        (
+            "+- Project [doc_id#0L, array_distinct(transform(sequence(1, "
+            "(size(__toks#6, false) - 2), None, Some(UTC)), lambdafunction("
+            "concat_ws( , slice(__toks#6, lambda x_2#9, 3)), lambda x_2#9, "
+            "false))) AS sh#8]",
+            0,
+        ),
+        # top-level repeats (quality_exprs shape) are not nested
+        (
+            f"+- Project [size({_TOK}, false) AS n#1, "
+            f"array_distinct({_TOK}) AS d#2]",
+            0,
+        ),
+        # inline token_shingles(tokens(...)): two top-level sizes plus
+        # ONE tokenize captured by the transform lambda
+        (
+            f"+- Generate explode(CASE WHEN ((size({_TOK}, false) - 2) >= 1) "
+            f"THEN array_distinct(transform(sequence(1, (size({_TOK}, false) "
+            f"- 2), None, Some(UTC)), lambdafunction(concat_ws( , slice("
+            f"{_TOK}, lambda x_14#130, 3)), lambda x_14#130, false))) "
+            "ELSE [] END), [doc_id#121L], false, [_g#132]",
+            1,
+        ),
+        # nested lambdas count the tokenize once; two lines add up
+        (
+            f"+- Project [transform(a#1, lambdafunction(transform(b#2, "
+            f"lambdafunction(slice({_TOK}, lambda y#4, 2), lambda y#4, "
+            "false)), lambda x#3, false)) AS t#5]\n"
+            f"+- Project [aggregate(a#1, 0, lambdafunction(size({_TOK}) "
+            "+ lambda acc#6, lambda acc#6, lambda z#7, false)) AS s#8]",
+            2,
+        ),
+    ],
+    ids=["own_projection", "shingles_over_column", "top_level_repeats",
+         "inline_shingles", "nested_lambdas"],
+)
+def test_tokenize_in_lambda_counter(plan, expected):
+    """Unit test of scripts/plan_lint.py::_tokenize_in_lambda on
+    hand-written plan strings: only tokenizes INSIDE a lambda body
+    count, not the tokenize's own filter lambda or top-level repeats."""
+    assert load_plan_lint()._tokenize_in_lambda(plan) == expected
+
+
 @pytest.mark.parametrize("name", _SUBSET)
 def test_no_cartesian_no_row_python(spark, name):
     df = entrymod.queries()[name](spark, SF_SMOKE)
@@ -59,21 +116,9 @@ def test_recomputed_hash_gate_fires_on_planted_nullable_key(spark):
     below the Project computing it, so the md5/conv chain evaluates
     twice — and assert the gate counts it. Until now the gate was only
     proven by the absence of violations (VERDICT r13 #5)."""
-    import importlib.util
-    import os
-
     from pyspark.sql import functions as F
 
-    spec = importlib.util.spec_from_file_location(
-        "plan_lint",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "scripts",
-            "plan_lint.py",
-        ),
-    )
-    plan_lint = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(plan_lint)
+    plan_lint = load_plan_lint()
 
     left = spark.range(100).select(
         F.col("id"),

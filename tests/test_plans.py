@@ -16,7 +16,7 @@ import pytest
 import __spark_entry__ as entrymod
 from pyspark.sql import functions as F
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, load_plan_lint
 
 
 @pytest.fixture(autouse=True)
@@ -116,6 +116,23 @@ def test_ngram_jaccard_no_scanfilter_tokenize(spark):
     # one tokenize per join side in the projection — not 8× in filters
     assert plan.count("split(trim(lower(") <= 2
     assert "SortMergeJoin" in plan
+
+
+@pytest.mark.parametrize("name", ["q_decontaminate", "q_passage_dedup"])
+def test_no_tokenize_inside_lambda(spark, name):
+    """Tokenize once per document: the tokenize sits in its own
+    projection and the shingle / passage lambdas read the projected
+    token column. Inline, every lambda element (each shingle or
+    passage) re-runs the regex split. These builders are outside the
+    registry, so scripts/plan_lint.py's gate does not reach them."""
+    from the_build_project_image_retrieval_with_vector_databases_spark import (
+        queries_text,
+    )
+
+    df = getattr(queries_text, name)(spark, SF_SMOKE)
+    plan = _physical(df)
+    assert "split(trim(lower(" in plan
+    assert load_plan_lint()._tokenize_in_lambda(plan) == 0, plan
 
 
 def test_ivf_topk_partition_pruned(spark):

@@ -22,27 +22,29 @@ def tokens(text: Column | str, lowercase: bool = True) -> Column:
     return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
 
 
-def token_shingles(
-    toks: Column | str, n: int = 3, sep: str = " ", distinct: bool = True
-) -> Column:
-    """n-gram shingles over a token array → ``array<string>`` —
-    DISTINCT by default (the dedup/decontam join unit); pass
-    ``distinct=False`` to keep every positional occurrence (the
-    repetition-counting unit, where multiplicity IS the signal).
+def token_shingles(toks: Column | str, n: int = 3) -> Column:
+    """DISTINCT n-gram shingles over a token array → ``array<string>``
+    (the dedup/decontam join unit).
 
     Implemented with ``sequence`` + ``slice`` (built-in, no UDF): shingle i
-    is ``concat_ws(sep, slice(toks, i, n))`` for i in 1..len-n+1.
+    is ``concat_ws(" ", slice(toks, i, n))`` for i in 1..len-n+1.
 
     Guard: ``sequence(1, 0)`` is DESCENDING in Spark (yields [1, 0], and
     slice(…, 0, n) then throws), so token arrays shorter than ``n`` map to
     an explicit empty shingle array.
+
+    Rule: pass a PROJECTED token column, never an inline ``tokens(...)``
+    expression. ``toks`` is referenced inside the ``transform`` lambda,
+    so an inline tokenize re-runs the regex split once per shingle
+    (O(tokens²) per document). ``operators.dedup.doc_shingles`` does
+    the projection.
     """
     toks = F.col(toks) if isinstance(toks, str) else toks
     count = F.size(toks) - F.lit(n - 1)
     idx = F.sequence(F.lit(1), count)
-    sh = F.transform(idx, lambda i: F.concat_ws(sep, F.slice(toks, i, n)))
-    if distinct:
-        sh = F.array_distinct(sh)
+    sh = F.array_distinct(
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+    )
     empty = F.array().cast("array<string>")
     return F.when(count >= 1, sh).otherwise(empty)
 

@@ -834,19 +834,15 @@ def lsh_candidates(
     planes: list[list[float]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    pinned: bool = True,
     carry: list[str] | None = None,
 ) -> DataFrame:
     """Candidate near-neighbor pairs = same LSH bucket — ONE shuffle on
-    the bucket key (r18, guide §2.3/§2.4: the per-bucket combination
-    expansion of minhash_lsh_pairs/simhash). The previous self-join
-    shuffled the bucketed relation twice AND evaluated the sign-plane
-    projection (P literal-array dot products per vector) twice — one
-    groupBy collects each bucket's id-sorted rows and posexplode +
-    suffix slice emits exactly the i<j pairs, so the projection runs
-    once and the broadcast-mis-estimate hazard the shuffle_hash pin
-    guarded is gone (no join remains; ``pinned`` stays accepted for
-    API compatibility).
+    the bucket key (the per-bucket combination expansion of
+    minhash_lsh_pairs/simhash): one groupBy collects each bucket's
+    id-sorted rows and posexplode + suffix slice emits exactly the i<j
+    pairs, so the sign-plane projection (P literal-array dot products
+    per vector) runs once and there is no join whose broadcast side
+    could be mis-estimated.
 
     ``carry`` names payload columns to ride the bucket shuffle and come
     back as ``<col>_l`` / ``<col>_r`` on each pair — the caller's

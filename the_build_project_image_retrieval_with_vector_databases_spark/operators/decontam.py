@@ -25,31 +25,52 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import md5_long, token_shingles, tokens
+from ..functions.text import md5_long
+from .dedup import doc_shingles
+
+
+def _grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(_id, _g) — one row per distinct n-gram per document, exploded
+    from :func:`~.dedup.doc_shingles` (tokenize once per document;
+    explode_outer + null filter keeps the shingle expression out of an
+    inferred pushed-down filter)."""
+    return (
+        doc_shingles(df, n, text_col, id_col)
+        .select(F.col(id_col).alias("_id"), F.explode_outer("sh").alias("_g"))
+        .filter(F.col("_g").isNotNull())
+    )
 
 
 def _gram_hashes(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, h) — one row per distinct n-gram hash per document.
+    """(_id, h) — one row per distinct n-gram hash per document.
 
     The coalesce is a pure nullability annotation (md5 of a non-null
     gram is never null, so the -1 sentinel is unreachable): conv() is
     nullable in the schema, and a nullable join key makes the gram
     join infer an isnotnull(h) filter that Catalyst pushes BELOW this
     projection — re-evaluating the full 15-digit md5 fold once more
-    per gram on BOTH sides (observed in the executed plan; the
-    corpus-side tokenize+hash is this operator's dominant cost).
-    Non-nullable key → no inferred filter → one evaluation per gram."""
-    return (
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(token_shingles(tokens(F.col(text_col)), n=n)).alias("_g"),
-        )
-        .select(
-            "_id",
-            F.coalesce(
-                md5_long(F.col("_g"), digits=15), F.lit(-1)
-            ).alias("h"),
-        )
+    per gram on BOTH sides. Non-nullable key → no inferred filter →
+    one evaluation per gram."""
+    return _grams(df, id_col, text_col, n).select(
+        "_id", F.coalesce(md5_long(F.col("_g"), digits=15), F.lit(-1)).alias("h")
+    )
+
+
+def _hit_doc_grams(
+    corpus: DataFrame, hits: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """``hits`` (keyed by ``_id``) with each hit document's distinct
+    gram count ``n_grams``. The corpus joins the hit set FIRST, so the
+    second tokenize touches hit documents only (contamination is rare by
+    construction), never the whole corpus. The hit side carries no
+    broadcast hint: its size tracks the contamination rate, not the
+    benchmark size, so AQE decides from runtime stats."""
+    carry = tuple(c for c in hits.columns if c != "_id")
+    hit_docs = corpus.select(F.col(id_col).alias("_id"), F.col(text_col)).join(
+        hits, "_id"
+    )
+    return doc_shingles(hit_docs, n, text_col, "_id", carry).select(
+        "_id", F.size("sh").alias("n_grams"), *carry
     )
 
 
@@ -72,11 +93,10 @@ def ngram_overlap(
     flags documents above ``severe_frac`` (likely verbatim leaks rather
     than incidental collisions).
     """
-    # ONE full tokenize+shingle pass over the corpus (the dominant cost;
-    # profiled round 5: folding size(grams) into the same projection as
-    # explode(grams) doubles the generated code for the shingle
-    # expression past the codegen limit and runs ~13x slower interpreted
-    # — the gram count must NOT ride the explode projection).
+    # ONE full tokenize+shingle pass over the corpus (the dominant cost).
+    # The gram count must NOT ride the explode projection: folding
+    # size(grams) into it doubles the generated code for the shingle
+    # expression past the codegen limit (~13x slower interpreted).
     corp = _gram_hashes(corpus, id_col, text_col, n)
     bench = (
         _gram_hashes(benchmark, id_col, text_col, n)
@@ -94,38 +114,16 @@ def ngram_overlap(
         )
         .filter(F.col("n_shared") >= min_hits)
     )
-    # Per-doc gram counts are needed ONLY for flagged docs (contamination
-    # is rare by construction — benchmark ≪ corpus), so join the hit set
-    # back to the corpus FIRST and tokenize just the survivors: the
-    # second shingle evaluation touches hit docs, not the corpus.
-    # Round-4 scale-proof follow-up — the old shape ran a second
-    # corpus-wide tokenize pass and shuffled an N-row sizes table.
-    # The hit-set side is NOT broadcast-hinted: its size tracks the
-    # CONTAMINATION RATE, not the benchmark size (a tiny benchmark
-    # leaked corpus-wide yields corpus-sized hits), so the runtime
-    # decision belongs to AQE — it broadcasts small hit sets from actual
-    # stats and falls back to a shuffled hash join when they are not.
-    grams = token_shingles(tokens(F.col(text_col)), n=n)
-    # raw integer-ratio double: bit-exact cross-engine; rounding is the
-    # .5-tie hazard (min_cost_order class, CHANGES_r05)
+    # raw integer-ratio double: bit-exact cross-engine (rounding would
+    # reintroduce the .5-tie hazard)
     frac: Column = F.col("n_shared").cast("double") / F.col("n_grams").cast("double")
-    return (
-        corpus.select(F.col(id_col).alias("_id"), F.col(text_col))
-        .join(hits, "_id")
-        .select(
-            F.col("_id").alias(id_col),
-            F.size(grams).alias("n_grams"),
-            "n_shared",
-            "n_bench_docs",
-        )
-        .select(
-            id_col,
-            "n_grams",
-            "n_shared",
-            "n_bench_docs",
-            frac.alias("overlap_frac"),
-            (frac >= F.lit(severe_frac)).alias("severe"),
-        )
+    return _hit_doc_grams(corpus, hits, id_col, text_col, n).select(
+        F.col("_id").alias(id_col),
+        "n_grams",
+        "n_shared",
+        "n_bench_docs",
+        frac.alias("overlap_frac"),
+        (frac >= F.lit(severe_frac)).alias("severe"),
     )
 
 
@@ -270,14 +268,11 @@ def bloom_decontaminate(
     """
     def _gram_positions(df: DataFrame) -> DataFrame:
         # one row per distinct n-gram per document, with its probe
-        # positions (token_shingles dedups within doc). The digest is
-        # materialized in its own projection (the doc_shingles
-        # contract) and sliced twice — ONE md5 evaluation per gram.
-        g = df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(token_shingles(tokens(F.col(text_col)), n=n)).alias("_g"),
+        # positions. The digest is materialized in its own projection
+        # and sliced twice — ONE md5 evaluation per gram.
+        hexed = _grams(df, id_col, text_col, n).select(
+            "_id", F.md5(F.col("_g")).alias("_h")
         )
-        hexed = g.select("_id", F.md5(F.col("_g")).alias("_h"))
         # coalesce is a pure nullability annotation: the position is
         # never null (md5 of a non-null gram), but conv() is nullable
         # in the schema, and the semi joins below would otherwise
@@ -316,19 +311,9 @@ def bloom_decontaminate(
         .agg(F.count("*").alias("n_maybe"))
         .filter(F.col("n_maybe") >= min_hits)
     )
-    # gram counts only for flagged docs (the ngram_overlap lesson: the
-    # second tokenize pass touches hits, not the corpus)
-    grams = token_shingles(tokens(F.col(text_col)), n=n)
     frac = F.col("n_maybe").cast("double") / F.col("n_grams").cast("double")
-    return (
-        corpus.select(F.col(id_col).alias("_id"), F.col(text_col))
-        .join(hits, "_id")
-        .select(
-            F.col("_id").alias(id_col),
-            F.size(grams).alias("n_grams"),
-            "n_maybe",
-        )
-        .select(id_col, "n_grams", "n_maybe", frac.alias("maybe_frac"))
+    return _hit_doc_grams(corpus, hits, id_col, text_col, n).select(
+        F.col("_id").alias(id_col), "n_grams", "n_maybe", frac.alias("maybe_frac")
     )
 
 
@@ -341,8 +326,7 @@ def contamination_eval_split(
     n: int = 4,
     dirty_min_hits: int = 1,
 ) -> DataFrame:
-    """GPT-3 Appendix-C dirty/clean EVAL split (staged r14, r16
-    registration candidate) — the REVERSE direction of
+    """GPT-3 Appendix-C dirty/clean EVAL split — the REVERSE direction of
     :func:`ngram_overlap`: instead of flagging training documents that
     leak benchmark text, score each EVALUATION example by its n-gram
     overlap with the training corpus and split the benchmark into a
@@ -369,12 +353,10 @@ def contamination_eval_split(
         .groupBy("_id")
         .agg(F.countDistinct("h").alias("n_dirty_grams"))
     )
-    grams = token_shingles(tokens(F.col(text_col)), n=n)
     n_dirty = F.coalesce(F.col("n_dirty_grams"), F.lit(0))
     return (
-        eval_df.select(
-            F.col(id_col).alias("_id"), F.size(grams).alias("n_grams")
-        )
+        doc_shingles(eval_df, n, text_col, id_col)
+        .select(F.col(id_col).alias("_id"), F.size("sh").alias("n_grams"))
         # hits ≤ |benchmark| rows by construction — broadcast, so the
         # final assembly never sorts/shuffles the (already tiny) sides
         .join(F.broadcast(hits), "_id", "left")

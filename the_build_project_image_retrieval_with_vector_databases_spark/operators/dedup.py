@@ -127,38 +127,36 @@ def exact_dedup_keep_first(df: DataFrame, text_col: str = "text", id_col: str = 
 
 
 def doc_shingles(
-    df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame,
+    n: int = 3,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(doc_id, sh: array<string>) — distinct token n-gram shingles, one
-    row per document. The shared upstream of every near-dup operator;
-    ``spread`` unlocks all cores when the scan has too few splits (one
-    fixture file → one task otherwise; a no-op at real input widths).
+    """(id_col, *carry, sh: array<string>) — distinct token n-gram
+    shingles, one row per document: the one tokenize→shingle step
+    behind every n-gram operator (near-dup, decontamination, novelty,
+    source-overlap sketches). ``carry`` names extra columns that pass
+    through unchanged. The near-dup callers ``spread`` their input first
+    (a one-file fixture scan is one task otherwise); the decontamination
+    corpus side does not: there the extra round-robin shuffle speeds up
+    the call but adds more CPU time to the whole pipeline than it saves.
 
     The tokenize runs in its OWN projection: ``token_shingles`` references
     its token-array input multiple times (size + per-shingle slice), and
-    inlining the regex-split expression makes Catalyst re-evaluate the
-    tokenize once per reference — O(tokens × shingles) per document,
-    measured 2× wall-clock on the whole shingle pass. A separate alias is
-    not collapsed (CollapseProject keeps non-cheap multi-referenced
-    aliases), so the split happens once per row."""
-    toked = spread(df).select(F.col(id_col), tokens(text_col).alias("__toks"))
-    return toked.select(
-        F.col(id_col), token_shingles(F.col("__toks"), n).alias("sh")
-    )
+    an inline regex-split expression is re-evaluated once per reference —
+    including once per shingle inside the ``transform`` lambda, so
+    O(tokens × shingles) per document. A separate alias is not collapsed
+    (CollapseProject keeps non-cheap multi-referenced aliases), so the
+    split happens once per row.
 
-
-def shingle_table(
-    df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, shingle) inverted index over distinct token n-gram shingles.
-
-    explode_outer + null-filter (not plain explode) everywhere a heavy
-    array expression feeds a generate — see ngram_jaccard_pairs."""
-    return (
-        doc_shingles(df, n, text_col, id_col)
-        .select(F.col(id_col), F.explode_outer("sh").alias("shingle"))
-        .filter(F.col("shingle").isNotNull())
-    )
+    Consumers explode ``sh`` with ``explode_outer`` + a null filter, not
+    plain ``explode``: a bare explode of an attribute lets
+    InferFiltersFromGenerate push ``size(sh) > 0`` below this projection,
+    inlining the whole tokenize+shingle expression as a per-row filter."""
+    keys = [F.col(c) for c in (id_col, *carry)]
+    toked = df.select(*keys, tokens(text_col).alias("__toks"))
+    return toked.select(*keys, token_shingles(F.col("__toks"), n).alias("sh"))
 
 
 def ngram_jaccard_pairs(
@@ -214,13 +212,10 @@ def ngram_jaccard_pairs(
     the reuse is the whole win, and both losing variants broke or
     replaced it with something costlier.
     """
-    # explode_OUTER + null-filter, not plain explode: a bare explode lets
-    # InferFiltersFromGenerate push `size(shingles) > 0` into the scan,
-    # inlining the whole tokenize+shingle expression as a per-row scan
-    # filter (measured 16 copies of the tokenize subtree in the plan and
-    # ~5× wall-clock). The outer generate blocks that pushdown; empty-doc
-    # rows surface as one null and are dropped here instead.
-    ex = doc_shingles(df, n, text_col, id_col).select(
+    # explode_OUTER + null-filter (the doc_shingles rule; a bare explode
+    # put 16 copies of the tokenize subtree in this plan, ~5× wall-clock).
+    # Empty-doc rows surface as one null and are dropped here.
+    ex = doc_shingles(spread(df), n, text_col, id_col).select(
         F.col(id_col),
         F.size("sh").alias("__raw_n_sh"),
         F.explode_outer("sh").alias("shingle_s"),
@@ -305,7 +300,7 @@ def minhash_signatures(
     via a left join back to the id universe."""
     assert num_hashes <= len(MINHASH_COEFFS)
     if shingles is None:
-        shingles = doc_shingles(df, n, text_col, id_col)
+        shingles = doc_shingles(spread(df), n, text_col, id_col)
     xs = (
         shingles.select(F.col(id_col), F.explode_outer("sh").alias("shingle"))
         .filter(F.col("shingle").isNotNull())
@@ -379,7 +374,9 @@ def minhash_lsh_pairs(
     # both sides of the verify join (at 100 TB this halves the dominant
     # scan+tokenize cost; the persisted set is corpus-sized and
     # MEMORY_AND_DISK spills safely).
-    shs = _opt_persist(doc_shingles(df, n, text_col, id_col), cache_handles)
+    shs = _opt_persist(
+        doc_shingles(spread(df), n, text_col, id_col), cache_handles
+    )
     # r18: the signature table has exactly ONE consumer now (the bucket
     # aggregate below — the banded self-join that read it twice is
     # gone), so the r17 persist was dropped: persisting a single-
@@ -679,7 +676,9 @@ def minhash_lsh_incremental(
     rows_per_band = num_hashes // bands
 
     def prep(df):
-        shs = _opt_persist(doc_shingles(df, n, text_col, id_col), cache_handles)
+        shs = _opt_persist(
+            doc_shingles(spread(df), n, text_col, id_col), cache_handles
+        )
         # sentinel=False: same provably-dropped-candidates argument as
         # minhash_lsh_pairs
         sigs = minhash_signatures(

@@ -57,7 +57,7 @@ def kmv_distinct(
         F.col("n_seen"),
         # raw double: (k-1)/(hk/HASH_SPACE) is two IEEE divisions of
         # exact integers — bit-identical cross-engine; rounding is the
-        # .5-tie hazard (min_cost_order class, CHANGES_r05)
+        # .5-tie hazard (Spark HALF_UP vs DuckDB's multiply/rint path)
         est.alias("kmv_est"),
     )
 
@@ -152,16 +152,15 @@ def source_overlap_matrix(
     k: int = 64,
 ) -> DataFrame:
     """Pairwise cross-source n-gram overlap matrix via per-source KMV
-    sketches (staged r14, r17 registration candidate) — the
-    mix-design question "how much do my sources repeat each other?"
-    answered without an all-pairs doc comparison: per source, the k
-    smallest distinct 60-bit gram hashes (a KMV sketch, Beyer et al.
-    2007); per source PAIR, the k smallest hashes of the sketch UNION
-    and the fraction of them present in BOTH sketches — the standard
-    KMV Jaccard estimator. When a pair's merged distinct-gram count is
-    below k the estimate is EXACT by construction (the sketch IS the
-    distinct set) — the fixture corpus sits in the exact regime, so
-    the oracle check is exact too.
+    sketches — the mix-design question "how much do my sources repeat
+    each other?" answered without an all-pairs doc comparison: per
+    source, the k smallest distinct 60-bit gram hashes (a KMV sketch,
+    Beyer et al. 2007); per source PAIR, the k smallest hashes of the
+    sketch UNION and the fraction of them present in BOTH sketches — the
+    standard KMV Jaccard estimator. When a pair's merged distinct-gram
+    count is below k the estimate is EXACT by construction (the sketch
+    IS the distinct set) — the fixture corpus sits in the exact regime,
+    so the oracle check is exact too.
 
     Output: one row per unordered source pair (source_a < source_b) —
     ``(source_a, source_b, n_slots, n_shared, jaccard_est)`` with
@@ -174,28 +173,23 @@ def source_overlap_matrix(
     after operates on the ≤ |sources|·k slot table — pair expansion,
     union ranking, and membership counting are broadcast joins and a
     window over a sketch-sized input, never the corpus."""
-    from ..functions.text import token_shingles, tokens
+    from .decontam import _gram_hashes
 
-    grams = df.select(
-        F.col(source_col).alias("source"),
-        F.explode(token_shingles(tokens(F.col(text_col)), n=n)).alias("_g"),
-    ).select(
-        "source",
-        F.coalesce(md5_long(F.col("_g"), digits=15), F.lit(-1)).alias("h"),
+    hashes = (
+        _gram_hashes(df, source_col, text_col, n)
+        .select(F.col("_id").alias("source"), "h")
+        .distinct()
     )
-    hashes = grams.distinct()
     w = Window.partitionBy("source").orderBy(F.col("h").asc())
     slots = (
         hashes.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
         .select("source", "h")
     )
-    # r18 (guide §1.1 — don't compute it three times): ``slots`` is
-    # consumed by THREE downstream subtrees (srcs twice via the pair
-    # cross-join, plus the merged broadcast), and without a
+    # ``slots`` is consumed by THREE downstream subtrees (srcs twice via
+    # the pair cross-join, plus the merged broadcast); without a
     # materialization each reference re-derives the ENTIRE corpus
-    # pipeline — scan → tokenize → shingle → distinct → window ran 3×
-    # (measured at sf0.1: slots alone 1.12 s, full query 2.96 s).
+    # pipeline (scan → tokenize → shingle → distinct → window).
     # The sketch table is ≤ |sources|·k rows BY CONSTRUCTION, so the
     # process-temp parquet spill (the engine's zero-leaked-blocks
     # materialization contract) costs one tiny write + read-back and

@@ -27,10 +27,6 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("toks", tokens(text_col))
-
-
 def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-document token count / distinct count / mean token length."""
     toks = tokens(text_col)
@@ -44,8 +40,7 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
         # raw double: a single IEEE division of two exact integers is
         # bit-identical cross-engine, while round(ratio, 6) diverges on
-        # exact .5 ties (Spark HALF_UP vs DuckDB's multiply/rint path —
-        # the min_cost_order divergence class, CHANGES_r05)
+        # exact .5 ties (Spark HALF_UP vs DuckDB's multiply/rint path)
         (total_len.cast("double") / F.greatest(n, F.lit(1)).cast("double")).alias(
             "mean_token_len"
         ),
@@ -874,15 +869,14 @@ def ngram_novelty_score(
     stale_below: float = 0.5,
     cache_handles: list | None = None,
 ) -> DataFrame:
-    """First-occurrence n-gram novelty (staged r14, r17 registration
-    candidate): for each document, the fraction of its DISTINCT
-    n-grams whose globally FIRST occurrence (minimum ``id_col``) is
-    this document — "how much new content does this doc add to the
-    corpus in ingestion order?", the per-document form of the
+    """First-occurrence n-gram novelty: for each document, the fraction
+    of its DISTINCT n-grams whose globally FIRST occurrence (minimum
+    ``id_col``) is this document — "how much new content does this doc
+    add to the corpus in ingestion order?", the per-document form of the
     duplicate-text value argument in Lee et al. 2022. A doc whose
-    novelty falls below ``stale_below`` is flagged ``is_stale`` (most
-    of its content already exists earlier in the corpus — the
-    candidates exact/near dedup would keep only one of).
+    novelty falls below ``stale_below`` is flagged ``is_stale`` (most of
+    its content already exists earlier in the corpus — the candidates
+    exact/near dedup would keep only one of).
 
     Output: ``(doc_id, n_grams, n_novel, novelty_frac, is_stale)``;
     ``novelty_frac`` is the integer-ratio double.
@@ -894,22 +888,16 @@ def ngram_novelty_score(
     join of the two (co-partitioned with exchange 2's output), and a
     final doc-keyed aggregate. No window, no UDF, no driver state;
     every step linear in distinct grams."""
-    from ..functions.text import md5_long, token_shingles
+    from .decontam import _gram_hashes
+    from .dedup import _opt_persist
 
-    from ..operators.dedup import _opt_persist
-
-    grams = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(token_shingles(tokens(F.col(text_col)), n=n)).alias("_g"),
-    ).select(
-        "_id",
-        F.coalesce(md5_long(F.col("_g"), digits=15), F.lit(-1)).alias("h"),
-    )
-    # r17: the distinct (doc, gram-hash) table is consumed by BOTH the
+    # the distinct (doc, gram-hash) table is consumed by BOTH the
     # first-occurrence aggregate and the join side — persist under the
     # dedup-family cache contract so the scan→tokenize→md5→distinct
     # pipeline runs once, not twice (caller unpersists via handles).
-    e = _opt_persist(grams.distinct(), cache_handles)
+    e = _opt_persist(
+        _gram_hashes(df, id_col, text_col, n).distinct(), cache_handles
+    )
     first = e.groupBy("h").agg(F.min("_id").alias("_first"))
     per_doc = (
         e.join(first, "h")

@@ -532,37 +532,6 @@ def _dk_l2sq_slice(a: str, b: str, j: int, dsub: int) -> str:
     )
 
 
-def _oracle_pq_topk(m: int = PQ_M, dim: int = EMB_DIM, k: int = 10) -> str:
-    dsub = dim // m
-    code_exprs = ",\n         ".join(
-        f"min({{'d': {_dk_l2sq_slice('e.embedding', 't.embedding', j, dsub)}, "
-        f"'c': t.vec_id}}).c AS code_{j}"
-        for j in range(m)
-    )
-    lut_joins = "\n".join(
-        f"JOIN train t{j} ON t{j}.vec_id = c.code_{j}" for j in range(m)
-    )
-    adc = " + ".join(
-        f"({_dk_l2sq_slice('q.qe', f't{j}.embedding', j, dsub)})" for j in range(m)
-    )
-    return f"""
-WITH train AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16),
-q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-codes AS (
-  SELECT e.vec_id AS vid, e.label,
-         {code_exprs}
-  FROM embeddings e CROSS JOIN train t
-  WHERE e.vec_id <> 0
-  GROUP BY e.vec_id, e.label
-)
-SELECT c.vid AS vec_id, c.label, round({adc}, 6) AS adc_dist
-FROM codes c CROSS JOIN q
-{lut_joins}
-ORDER BY ({adc}) ASC, c.vid ASC
-LIMIT {k}
-"""
-
-
 def q_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production PQ shape as a registry query: ADC shortlist of
     k·overfetch = 30 candidates from the 8-byte codes, exact full-float
@@ -639,22 +608,6 @@ def q_lsh_bucket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return b.groupBy("bucket").agg(
         F.count("*").alias("n"), F.min("vec_id").alias("min_vec_id")
     )
-
-
-def _oracle_lsh_buckets() -> str:
-    bits = []
-    for i, h in enumerate(LSH_PLANES):
-        lit = "[" + ", ".join(repr(float(x)) for x in h) + "]::DOUBLE[]"
-        bits.append(
-            f"(CASE WHEN ({_dk_dot('embedding', lit)}) > 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-        )
-    expr = " + ".join(bits)
-    return f"""
-WITH b AS (SELECT vec_id, CAST({expr} AS BIGINT) AS bucket FROM embeddings)
-SELECT bucket, count(*) AS n, min(vec_id) AS min_vec_id
-FROM b GROUP BY bucket
-"""
 
 
 # ---------------------------------------------------------------------------

@@ -355,24 +355,6 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_minhash_signatures(num_hashes: int = 8) -> str:
-    sig_cols = []
-    for i in range(num_hashes):
-        a, b = MINHASH_COEFFS[i]
-        sig_cols.append(f"coalesce(min((x * {a} + {b}) % {MINHASH_PRIME}), {MINHASH_PRIME}) AS mh{i}")
-    coal = ", ".join(
-        f"coalesce(s.mh{i}, {MINHASH_PRIME}) AS mh{i}" for i in range(num_hashes)
-    )
-    return f"""
-WITH t AS (SELECT doc_id, {_dk_toks()} AS toks FROM documents),
-sh AS (SELECT doc_id, unnest({_dk_shingles('toks')}) AS shingle FROM t),
-xs AS (SELECT doc_id, ({_dk_hex2long('md5(shingle)')}) % {MINHASH_PRIME} AS x FROM sh),
-sig0 AS (SELECT doc_id, {', '.join(sig_cols)} FROM xs GROUP BY doc_id)
-SELECT d.doc_id, {coal}
-FROM (SELECT doc_id FROM documents) d LEFT JOIN sig0 s USING (doc_id)
-"""
-
-
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Owns the operator's caching contract: the tokenize/signature
     intermediates persist only while the pair table materializes to a
@@ -789,8 +771,12 @@ def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash, partial-count) pairs, never passage text."""
     from .functions.text import md5_long
 
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    toks = tokens(F.col("text"))
+    # the tokenize runs in its own projection (the doc_shingles rule):
+    # inline, the slice lambda below would re-split the text per passage
+    docs = spread(load_table(spark, sf_dir, "documents")).select(
+        "doc_id", tokens("text").alias("__toks")
+    )
+    toks = F.col("__toks")
     # Zero-token documents emit NO passages (fuzz-caught: the old
     # greatest(size, 1) floor manufactured an empty-string passage that
     # Spark hashed while DuckDB's list_slice-of-empty folded to NULL).

@@ -31,14 +31,3 @@ def read_manifest(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]
         F.posexplode("categories").alias("label", "category")
     ).select(F.col("label").cast("int"), "category")
     return train, categories
-
-
-def manifest_from_rows(
-    spark: SparkSession, train_rows, category_names
-) -> tuple[DataFrame, DataFrame]:
-    """Build the same two tables from in-memory rows (test fixture path)."""
-    train = spark.createDataFrame(train_rows, "label int, relpath string")
-    categories = spark.createDataFrame(
-        list(enumerate(category_names)), "label int, category string"
-    )
-    return train, categories
